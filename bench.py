@@ -313,22 +313,26 @@ def _time_queries(spark, qs, sf_dir, *, passes, jit_passes=1, job_counts=None):
                 group = f"bench:{name}:{p}"
                 sc.setJobGroup(group, name)
             t0 = time.perf_counter()
-            fn(spark, sf_dir).count()
-            elapsed = round(time.perf_counter() - t0, 4)
-            if tracker is not None:
-                sc.setJobGroup(None, None)
-                if final_pass:
-                    job_ids = tracker.getJobIdsForGroup(group)
-                    jobs, tasks = len(job_ids), 0
-                    for jid in job_ids:
-                        info = tracker.getJobInfo(jid)
-                        if info is None:
-                            continue
-                        for sid in info.stageIds:
-                            sinfo = tracker.getStageInfo(sid)
-                            if sinfo is not None and sinfo.numCompletedTasks > 0:
-                                tasks += sinfo.numTasks
-                    job_counts[name] = {"jobs": jobs, "tasks": tasks}
+            try:
+                fn(spark, sf_dir).count()
+                elapsed = round(time.perf_counter() - t0, 4)
+            finally:
+                if tracker is not None:
+                    # a raising query must not leave later work tagged
+                    # (pyspark 4.1's SparkContext has no clearJobGroup)
+                    sc._jsc.clearJobGroup()
+            if tracker is not None and final_pass:
+                job_ids = tracker.getJobIdsForGroup(group)
+                jobs, tasks = len(job_ids), 0
+                for jid in job_ids:
+                    info = tracker.getJobInfo(jid)
+                    if info is None:
+                        continue
+                    for sid in info.stageIds:
+                        sinfo = tracker.getStageInfo(sid)
+                        if sinfo is not None and sinfo.numCompletedTasks > 0:
+                            tasks += sinfo.numTasks
+                job_counts[name] = {"jobs": jobs, "tasks": tasks}
             if p >= jit_passes:
                 best[name] = min(best.get(name, elapsed), elapsed)
                 runs.setdefault(name, []).append(elapsed)

@@ -18,12 +18,6 @@ def is_blank(col: Column | str) -> Column:
     return c.isNull() | (F.trim(c.cast("string")) == "")
 
 
-def blank_to_null(col: Column | str) -> Column:
-    """Empty-string→NULL (reference load-time coercion, ``l_produtos.py:110-113``)."""
-    c = F.col(col) if isinstance(col, str) else col
-    return F.when(is_blank(c), F.lit(None)).otherwise(c)
-
-
 def coerce_numeric(col: Column | str, to: str = "double") -> Column:
     """``pd.to_numeric(errors='coerce')`` semantics: failures → NULL
     (reference ``et_produtos.py:154`` etc.). ANSI-safe via try_cast."""
@@ -35,21 +29,6 @@ def parse_date_br(col: Column | str) -> Column:
     """``DD/MM/YYYY`` parse, invalid → NULL (reference ``et_vendas.py:196-200``)."""
     c = F.col(col) if isinstance(col, str) else col
     return F.try_to_timestamp(c, F.lit("dd/MM/yyyy")).cast("date")
-
-
-def format_date_br(col: Column | str) -> Column:
-    """Format a date back to ``DD/MM/YYYY`` (reference ``et_vendas.py:214``)."""
-    return F.date_format(col, "dd/MM/yyyy")
-
-
-def month_bucket(col: Column | str) -> Column:
-    """``TO_CHAR(date,'YYYY-MM')`` equivalent (reference ``save_data_pdf_report.py:211``)."""
-    return F.date_format(col, "yyyy-MM")
-
-
-def money_round(col: Column | str) -> Column:
-    """NUMERIC(10,2)-equivalent rounding at the aggregate/sink edge."""
-    return F.round(col, 2)
 
 
 def epoch_seconds(col: Column | str) -> Column:

@@ -272,19 +272,6 @@ def _minhash_wide(ids: DataFrame, num_hashes: int) -> DataFrame:
     return ids.groupBy("doc_id").agg(*_minhash_aggs(num_hashes))
 
 
-def minhash_signatures(
-    df: DataFrame, *, num_hashes: int = 16, n: int = 3, text_col: str = "text"
-) -> DataFrame:
-    """Per-doc MinHash signature: (doc_id, k, minhash) for k in [0, K)."""
-    sh = shingle_sets(df, text_col, n)
-    wide = _minhash_wide(_shingle_ids(sh), num_hashes)
-    pairs = ", ".join(f"{k}, _mh{k}" for k in range(num_hashes))
-    return wide.select(
-        "doc_id",
-        F.expr(f"stack({num_hashes}, {pairs}) AS (k, minhash)"),
-    )
-
-
 def minhash_lsh_pairs(
     df: DataFrame,
     *,
@@ -911,20 +898,14 @@ def connected_components(
     prev_ckpt: DataFrame | None = None
     rounds = 0
     converged = False
+    # an all-empty pair plan can run ZERO tasks (AQE collapses empty
+    # relations), so the metrics accumulator never fires and the
+    # observation row is absent: check the materialized edge blocks
+    # once here and treat an empty graph as converged on round one
+    empty = not edges.take(1)
 
     def _changed(obs: Observation) -> int:
-        try:
-            return obs.get["changed"]
-        except Exception:
-            # an all-empty pair plan can run ZERO tasks (AQE collapses
-            # empty relations), so the metrics accumulator never fires
-            # and the observation row is absent — confirm the graph
-            # really is empty (one take over the materialized edge
-            # blocks, only on this error path) and report converged;
-            # any other cause must surface
-            if not edges.take(1):
-                return 0
-            raise
+        return 0 if empty else obs.get["changed"]
 
     while not converged and rounds < budget:
         obs_a, obs_b = Observation(), Observation()

@@ -1707,6 +1707,10 @@ def bpe_apply_oov_token_counts(
     Returns (doc_id, n_words, n_chars_tokenized, n_symbols) over the
     EVAL set; eval docs whose tokenization is empty drop out.
     """
+    if fold_batch < 1:
+        # 0 would divide by zero mid-replay and a negative batch would
+        # silently never cut the fold stack — fail loudly at entry
+        raise ValueError(f"fold_batch must be >= 1, got {fold_batch}")
     track: list[DataFrame] = []
     _, _, rules = _bpe_train_full(
         train, n_merges=n_merges, text_col=text_col, track=track

@@ -229,68 +229,10 @@ def td_sales_by_period(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# 3. SQL form (reference parity: the 5 statements ran as SQL text through
-#    PostgreSQL — here they run nearly verbatim through spark.sql / Catalyst;
-#    only TO_CHAR(date,'YYYY-MM') becomes date_format(data,'yyyy-MM')).
+# 3. SQL form (reference parity: the reference ran its report statements as
+#    SQL text through PostgreSQL — here the A1 statement runs through
+#    spark.sql / Catalyst).
 # ---------------------------------------------------------------------------
-
-REFERENCE_SQL = {
-    "sales_by_employee": """
-        SELECT e.id_empregado, e.nome,
-               COALESCE(ROUND(SUM(v.valor_total), 2), 0) AS valor_total
-        FROM vendas v
-        INNER JOIN empregados e ON v.id_empregado = e.id_empregado
-        GROUP BY e.id_empregado, e.nome
-        ORDER BY valor_total DESC
-    """,
-    "average_ticket_by_product": """
-        SELECT p.id_produto, p.nome,
-               COALESCE(ROUND(SUM(v.valor_total) / COUNT(v.id_venda), 2), 0)
-                   AS ticket_medio
-        FROM vendas v
-        INNER JOIN produtos p ON v.id_produto = p.id_produto
-        GROUP BY p.id_produto, p.nome
-    """,
-    "sales_by_category": """
-        SELECT p.categoria, COUNT(v.id_venda) AS quantidade_vendas
-        FROM vendas v
-        INNER JOIN produtos p ON v.id_produto = p.id_produto
-        GROUP BY p.categoria
-        ORDER BY quantidade_vendas DESC
-    """,
-    "top5_employees": """
-        SELECT e.id_empregado, e.nome,
-               COALESCE(ROUND(SUM(v.valor_total), 2), 0) AS valor_total
-        FROM empregados e
-        INNER JOIN vendas v ON v.id_empregado = e.id_empregado
-        GROUP BY e.id_empregado, e.nome
-        ORDER BY valor_total DESC
-        LIMIT 5
-    """,
-    "sales_by_period": """
-        SELECT date_format(v.data, 'yyyy-MM') AS periodo,
-               COUNT(v.id_venda) AS quantidade_vendas,
-               ROUND(SUM(v.valor_total), 2) AS valor_total
-        FROM vendas v
-        WHERE v.data IS NOT NULL
-        GROUP BY date_format(v.data, 'yyyy-MM')
-        ORDER BY periodo
-    """,
-}
-
-
-def run_reference_sql(
-    spark: SparkSession,
-    vendas: DataFrame,
-    produtos: DataFrame,
-    empregados: DataFrame,
-) -> dict[str, DataFrame]:
-    """Register the star schema as temp views and run the 5 reference SQL
-    statements through Catalyst (same plans as the DataFrame forms)."""
-    vendas.createOrReplaceTempView("vendas")
-    produtos.createOrReplaceTempView("produtos")
-    empregados.createOrReplaceTempView("empregados")
-    return {name: spark.sql(sql) for name, sql in REFERENCE_SQL.items()}
 
 
 def td_sales_by_employee_sql(spark: SparkSession, sf_dir: str) -> DataFrame:

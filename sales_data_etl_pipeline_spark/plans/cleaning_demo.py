@@ -19,10 +19,6 @@ from sales_data_etl_pipeline_spark.operators import cleaning
 from sales_data_etl_pipeline_spark.sources.tables import load_testdata
 
 
-def _lineitem(spark, sf_dir) -> DataFrame:
-    return load_testdata(spark, sf_dir, ("lineitem",))["lineitem"]
-
-
 # --- P2/P3/P4/P5/P7: dimension-normalization chain ---------------------------
 # r12 consolidation (r11 verdict #5): the former micro-gates
 # clean_fill_constant, clean_canonical_name, clean_fill_missing_name,

@@ -397,17 +397,16 @@ def _ephemeral_checkpoint_dir(query_name: str) -> str | None:
     alone; a RocksDB-provider probe LOST 0.1-0.6 s/gate at gate-scale
     state and is rejected in OPTIMIZATION_r17.md).
 
-    Override with ``SPARK_GRAFT_STREAM_CKPT_BASE``; returns None (let
-    Spark manage a temp checkpoint under java.io.tmpdir) when neither
-    the override nor /dev/shm exists."""
+    Override with ``SPARK_GRAFT_STREAM_CKPT_BASE`` (ignored when it names
+    no existing directory); returns None (let Spark manage a temp
+    checkpoint under java.io.tmpdir) when neither the override nor
+    /dev/shm exists."""
     import tempfile
 
-    base = os.environ.get("SPARK_GRAFT_STREAM_CKPT_BASE") or (
-        "/dev/shm" if os.path.isdir("/dev/shm") else None
-    )
-    if base is None:
-        return None
-    return tempfile.mkdtemp(prefix=f"stream_ckpt_{query_name}_", dir=base)
+    for base in (os.environ.get("SPARK_GRAFT_STREAM_CKPT_BASE"), "/dev/shm"):
+        if base and os.path.isdir(base):
+            return tempfile.mkdtemp(prefix=f"stream_ckpt_{query_name}_", dir=base)
+    return None
 
 
 def run_stream_to_memory(

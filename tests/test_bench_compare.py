@@ -112,3 +112,16 @@ def test_load_queries_guard_extended_run_uses_min2(tmp_path, capsys):
     total3, _ = load_queries(str(p3))
     assert total3 == 110.0
     assert capsys.readouterr().out == ""
+
+
+def test_time_queries_clears_job_group_after_a_raising_query(spark):
+    """A query that raises mid-pass must not leave the session's later
+    jobs tagged with its ``bench:*`` job group."""
+    import bench
+
+    def boom(spark, sf_dir):
+        raise RuntimeError("query failed")
+
+    with pytest.raises(RuntimeError, match="query failed"):
+        bench._time_queries(spark, {"boom": boom}, "", passes=1, job_counts={})
+    assert spark.sparkContext.getLocalProperty("spark.jobGroup.id") is None

@@ -263,3 +263,15 @@ def test_bpe_apply_oov_fold_batch_parity(spark):
     unbatched = counts(fold_batch=1000)  # no cut fires
     batched = counts(fold_batch=2)  # cuts after rules 2 and 4
     assert batched == unbatched and len(unbatched) == 2
+
+
+@pytest.mark.parametrize("fold_batch", [0, -1])
+def test_bpe_apply_oov_rejects_fold_batch_below_one(spark, fold_batch):
+    """0 used to raise ZeroDivisionError mid-replay and a negative batch
+    silently disabled the depth cut; both fail at entry now, before any
+    training job runs."""
+    from sales_data_etl_pipeline_spark.operators import text
+
+    docs = spark.createDataFrame([Row(doc_id=1, text="abab abxy")])
+    with pytest.raises(ValueError, match="fold_batch must be >= 1"):
+        text.bpe_apply_oov_token_counts(docs, docs, fold_batch=fold_batch)

@@ -339,3 +339,21 @@ def test_checkpoint_restart_exactly_once(spark, tmp_path):
     out = spark.read.parquet(str(tmp_path / "sink"))
     assert out.count() == 5
     assert {r.event_id for r in out.collect()} == {1, 2, 3, 4, 5}
+
+
+def test_ephemeral_checkpoint_dir_ignores_missing_override(monkeypatch, tmp_path):
+    """An override naming a missing directory falls back to the
+    /dev/shm-or-None path instead of failing inside mkdtemp; an
+    existing override is used as given."""
+    import os
+    import shutil
+
+    monkeypatch.setenv("SPARK_GRAFT_STREAM_CKPT_BASE", str(tmp_path / "gone"))
+    got = streaming._ephemeral_checkpoint_dir("q")
+    if os.path.isdir("/dev/shm"):
+        assert os.path.dirname(got) == "/dev/shm"
+        shutil.rmtree(got)
+    else:
+        assert got is None
+    monkeypatch.setenv("SPARK_GRAFT_STREAM_CKPT_BASE", str(tmp_path))
+    assert os.path.dirname(streaming._ephemeral_checkpoint_dir("q")) == str(tmp_path)

@@ -11,12 +11,20 @@ TWO value comparisons:
 - **6-sig** — the older tolerance check, reported when exact fails so the
   failure class is obvious (repr gap vs real value gap).
 
+A run over every entry (no query names given) also writes
+``CORRECTNESS_LOCAL.json`` beside ``__spark_entry__.py``: one row per
+entry in the ``CORRECTNESS_r*.json`` shape (rows_match / schema_match /
+hash_match / spark_rows / oracle_rows / err). Commit it with every
+change.
+
 Usage: python tools/check_correctness.py [sf_dir] [query ...]
 """
 
 from __future__ import annotations
 
+import json
 import math
+import os
 import sys
 import time
 
@@ -27,6 +35,10 @@ import duckdb
 import __spark_entry__ as entrymod
 from sales_data_etl_pipeline_spark.schemas import TESTDATA_TABLES
 from sales_data_etl_pipeline_spark.session import get_spark
+
+LOCAL_ARTIFACT = os.path.join(
+    os.path.dirname(entrymod.__file__), "CORRECTNESS_LOCAL.json"
+)
 
 
 def norm_cell(v):
@@ -74,6 +86,18 @@ def canon_pandas(pdf):
     return cells
 
 
+def value_diff(scols, srows, ocols, orows, se, oe) -> str:
+    """Explain an exact value-hash mismatch: a real value gap when the
+    6-significant-digit rows differ, else a repr/dtype gap."""
+    _, s = norm_rows(scols, srows)
+    _, o = norm_rows(ocols, orows)
+    if s != o:
+        diffs = [(i, a, b) for i, (a, b) in enumerate(zip(s, o)) if a != b]
+        return f"{len(diffs)} mismatched rows; first: {diffs[:3]}"
+    ed = [(i, a, b) for i, (a, b) in enumerate(zip(se, oe)) if a != b]
+    return f"EXACT-HASH MISMATCH (6-sig passes — repr/dtype gap); first: {ed[:3]}"
+
+
 def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     only = set(sys.argv[2:])
@@ -81,37 +105,35 @@ def main() -> int:
 
     con = duckdb.connect()
     for t in TESTDATA_TABLES:
-        import os
-
         p = f"{sf_dir}/{t}.parquet"
         if os.path.exists(p):
             con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{p}')")
 
     qs = entrymod.queries()
     oracles = entrymod.oracle_sql()
-    failures = 0
+    results = {}
     for name, fn in qs.items():
         if only and name not in only:
             continue
         t0 = time.time()
+        row = results[name] = {
+            "rows_match": False, "schema_match": False, "hash_match": False,
+            "spark_rows": None, "oracle_rows": None, "err": None,
+        }
         try:
             sdf = fn(spark, sf_dir)
             scols = sdf.columns
             spdf = sdf.toPandas()
             srows = [tuple(r) for r in sdf.collect()]
         except Exception as e:  # noqa: BLE001
-            print(f"FAIL {name}: spark error: {e}")
-            failures += 1
+            row["err"] = f"spark error: {e}"
+            print(f"FAIL {name}: {row['err']}")
             continue
+        row["spark_rows"] = len(srows)
         if name not in oracles:
-            try:
-                canon_pandas(spdf)  # the driver's rows-only canon must not blow up
-                extra = ""
-            except Exception as e:  # noqa: BLE001
-                extra = f" [CANON ERROR: {e}]"
-                failures += 1
-            print(f"OK?  {name}: rows-only check, {len(srows)} rows "
-                  f"({time.time()-t0:.1f}s) [no oracle]{extra}")
+            row.update(rows_match=None, schema_match=None, hash_match=None,
+                       err="no_oracle")
+            print(f"FAIL {name}: no oracle_sql() entry")
             continue
         try:
             res = con.execute(oracles[name])
@@ -119,51 +141,34 @@ def main() -> int:
             opdf = res.fetchdf()
             orows = [tuple(r) for r in opdf.itertuples(index=False, name=None)]
         except Exception as e:  # noqa: BLE001
-            print(f"FAIL {name}: duckdb error: {e}")
-            failures += 1
+            row["err"] = f"duckdb error: {e}"
+            print(f"FAIL {name}: {row['err']}")
             continue
-        ok = True
-        exact = False
+        row["oracle_rows"] = len(orows)
+        row["rows_match"] = len(srows) == len(orows)
+        row["schema_match"] = sorted(scols) == sorted(ocols)
         msgs = []
-        if len(srows) != len(orows):
-            ok = False
+        if not row["rows_match"]:
             msgs.append(f"rowcount spark={len(srows)} oracle={len(orows)}")
-        if sorted(scols) != sorted(ocols):
-            ok = False
+        if not row["schema_match"]:
             msgs.append(f"cols spark={sorted(scols)} oracle={sorted(ocols)}")
-        if ok:
+        if not msgs:
             try:
                 se, oe = canon_pandas(spdf), canon_pandas(opdf)
-                exact = se == oe
             except Exception as e:  # noqa: BLE001
                 msgs.append(f"canon error: {e}")
-            if not exact:
-                _, s = norm_rows(scols, srows)
-                _, o = norm_rows(ocols, orows)
-                if s != o:
-                    ok = False
-                    diffs = [
-                        (i, a, b) for i, (a, b) in enumerate(zip(s, o)) if a != b
-                    ]
-                    msgs.append(
-                        f"{len(diffs)} mismatched rows; first: {diffs[:3]}"
-                    )
-                else:
-                    ok = False
-                    ed = [
-                        (i, a, b)
-                        for i, (a, b) in enumerate(zip(se, oe))
-                        if a != b
-                    ]
-                    msgs.append(
-                        "EXACT-HASH MISMATCH (6-sig passes — repr/dtype gap); "
-                        f"first: {ed[:3]}"
-                    )
-        status = "PASS" if ok else "FAIL"
-        if not ok:
-            failures += 1
-        print(f"{status} {name}: {len(srows)} rows ({time.time()-t0:.1f}s)"
-              + ("" if ok else " :: " + "; ".join(msgs)))
+            else:
+                row["hash_match"] = se == oe
+                if not row["hash_match"]:
+                    msgs.append(value_diff(scols, srows, ocols, orows, se, oe))
+        print(f"{'FAIL' if msgs else 'PASS'} {name}: {len(srows)} rows "
+              f"({time.time()-t0:.1f}s)" + (" :: " + "; ".join(msgs) if msgs else ""))
+    failures = sum(not entrymod.is_green(r) for r in results.values())
+    if not only:
+        with open(LOCAL_ARTIFACT, "w") as f:
+            json.dump(results, f, indent=2)
+            f.write("\n")
+        print(f"wrote {LOCAL_ARTIFACT}")
     print(f"\n{failures} failures")
     return 1 if failures else 0
 
