@@ -18,6 +18,12 @@ rounds instead of N (plus the edge table). At cluster scale the same
 discipline bounds executor storage memory: a 30-round peel on 100 TB
 would otherwise hold 30 copies of the node table in block storage.
 
+``plans.pipeline.run_pipeline`` is a caller too: it checkpoints each
+cleaned table once so the sinks and the report queries share the rows,
+releases them if a later step raises, and otherwise hands them to its
+caller, which releases them once its last query has run (the pipeline
+CLI does so after the PDF report).
+
 Contract: pass the EXACT DataFrame returned by ``localCheckpoint``
 (its analyzed plan is the ``LogicalRDD`` wrapping the persisted RDD —
 a derived ``select``/``filter`` is not it, and :func:`release` raises

@@ -4,7 +4,11 @@ Each ``extract_treat_*`` mirrors one reference module
 (``extract-transform-data/et_*.py``) as ONE lazy DataFrame plan — where
 the reference mutates eagerly step by step with iterrows loops, here
 Catalyst sees the whole chain and fuses the narrow stages
-(SURVEY.md §3.2). The only materializations are at sinks.
+(SURVEY.md §3.2). ``run_pipeline`` then materializes each cleaned table
+once, as an eager local checkpoint, the way the reference loads each
+cleaned table into PostgreSQL once: the sinks, the report queries and
+the PDF all read those rows instead of re-running the chains from the
+CSVs.
 
 Run order matches the reference orchestrator (``pipeline.py:71-96``):
 produtos → vendas (needs produtos for category enrichment) → empregados
@@ -21,7 +25,7 @@ from sales_data_etl_pipeline_spark.functions import (
     is_blank,
     parse_date_br,
 )
-from sales_data_etl_pipeline_spark.operators import cleaning
+from sales_data_etl_pipeline_spark.operators import ckpt, cleaning
 from sales_data_etl_pipeline_spark.sources.csv import ROW_ORDINAL
 
 
@@ -179,32 +183,57 @@ def run_pipeline(
 ) -> dict[str, DataFrame]:
     """Full ETL run (reference ``pipeline.py:71-96``): ET all three tables,
     write parquet sinks (vendas renamed 'resumo-vendas' per reference
-    ``save_data_parquet.py:110-114``), return the clean DataFrames."""
+    ``save_data_parquet.py:110-114``), return the clean DataFrames.
+
+    Each cleaned table is an eager ``localCheckpoint``, taken in run
+    order (produtos first: vendas broadcast-joins it), so the sinks and
+    every later query read rows cleaned once, over a truncated lineage.
+    The returned frames are those checkpoints and belong to the caller:
+    ``ckpt.release(*dfs.values())`` frees them, or the ContextCleaner
+    does once the caller drops them. If a step after the first
+    checkpoint raises, every checkpoint taken so far is released before
+    the error propagates."""
     from sales_data_etl_pipeline_spark import schemas
     from sales_data_etl_pipeline_spark.sources.csv import read_csv_with_ordinal
     from sales_data_etl_pipeline_spark.sources.parquet import write_parquet
 
     validate_inputs(produtos_csv, vendas_csv, empregados_csv)
 
-    produtos = extract_treat_produtos(
-        read_csv_with_ordinal(spark, produtos_csv, schemas.PRODUTOS_RAW)
-    )
-    vendas = extract_treat_vendas(
-        read_csv_with_ordinal(spark, vendas_csv, schemas.VENDAS_RAW),
-        produtos,
-        fallback_date=fallback_date,
-    )
-    empregados = extract_treat_empregados(
-        read_csv_with_ordinal(spark, empregados_csv, schemas.EMPREGADOS_RAW)
-    )
+    taken: list[DataFrame] = []
 
-    write_parquet(produtos, f"{output_dir}/produtos.parquet")
-    write_parquet(
-        cleaning.drop_audit_columns(vendas), f"{output_dir}/resumo-vendas.parquet"
-    )
-    write_parquet(
-        cleaning.drop_audit_columns(empregados), f"{output_dir}/empregados.parquet"
-    )
+    def materialize(df: DataFrame) -> DataFrame:
+        taken.append(df.localCheckpoint(eager=True))
+        return taken[-1]
+
+    try:
+        produtos = materialize(
+            extract_treat_produtos(
+                read_csv_with_ordinal(spark, produtos_csv, schemas.PRODUTOS_RAW)
+            )
+        )
+        vendas = materialize(
+            extract_treat_vendas(
+                read_csv_with_ordinal(spark, vendas_csv, schemas.VENDAS_RAW),
+                produtos,
+                fallback_date=fallback_date,
+            )
+        )
+        empregados = materialize(
+            extract_treat_empregados(
+                read_csv_with_ordinal(spark, empregados_csv, schemas.EMPREGADOS_RAW)
+            )
+        )
+
+        write_parquet(produtos, f"{output_dir}/produtos.parquet")
+        write_parquet(
+            cleaning.drop_audit_columns(vendas), f"{output_dir}/resumo-vendas.parquet"
+        )
+        write_parquet(
+            cleaning.drop_audit_columns(empregados), f"{output_dir}/empregados.parquet"
+        )
+    except BaseException:
+        ckpt.release(*taken)
+        raise
     return {"produtos": produtos, "vendas": vendas, "empregados": empregados}
 
 
@@ -225,22 +254,25 @@ def main() -> None:
     spark = get_spark("sales-pipeline")
     with timed_step("pipeline"):
         dfs = run_pipeline(spark, produtos_csv, vendas_csv, empregados_csv, out_dir)
-        results = {
-            "sales_by_employee": analytics.sales_by_employee(
-                dfs["vendas"], dfs["empregados"]
-            ),
-            "average_ticket_by_product": analytics.average_ticket_by_product(
-                dfs["vendas"], dfs["produtos"]
-            ),
-            "sales_by_category": analytics.sales_by_category(
-                dfs["vendas"], dfs["produtos"]
-            ),
-            "top5_employees": analytics.top5_employees(
-                dfs["vendas"], dfs["empregados"]
-            ),
-            "sales_by_period": analytics.sales_by_period(dfs["vendas"]),
-        }
-        path = report.save_report(results, f"{out_dir}/relatorio-final")
+        try:
+            results = {
+                "sales_by_employee": analytics.sales_by_employee(
+                    dfs["vendas"], dfs["empregados"]
+                ),
+                "average_ticket_by_product": analytics.average_ticket_by_product(
+                    dfs["vendas"], dfs["produtos"]
+                ),
+                "sales_by_category": analytics.sales_by_category(
+                    dfs["vendas"], dfs["produtos"]
+                ),
+                "top5_employees": analytics.top5_employees(
+                    dfs["vendas"], dfs["empregados"]
+                ),
+                "sales_by_period": analytics.sales_by_period(dfs["vendas"]),
+            }
+            path = report.save_report(results, f"{out_dir}/relatorio-final")
+        finally:
+            ckpt.release(*dfs.values())
         print(f"report: {path}")
 
 

@@ -11,7 +11,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from sales_data_etl_pipeline_spark.operators import cleaning
+from sales_data_etl_pipeline_spark.operators import ckpt, cleaning
 from sales_data_etl_pipeline_spark.plans import pipeline
 
 
@@ -185,15 +185,25 @@ def dirty_csvs(tmp_path_factory):
     return root
 
 
-def test_full_pipeline_invariants(spark, dirty_csvs, tmp_path):
-    out = pipeline.run_pipeline(
+@pytest.fixture(scope="module")
+def pipeline_run(spark, dirty_csvs, tmp_path_factory):
+    """One pipeline run over the dirty CSVs: (returned frames, output dir).
+    The frames are caller-owned checkpoints, released at teardown."""
+    out_dir = tmp_path_factory.mktemp("pipeline") / "out"
+    dfs = pipeline.run_pipeline(
         spark,
         str(dirty_csvs / "produtos.csv"),
         str(dirty_csvs / "vendas.csv"),
         str(dirty_csvs / "empregados.csv"),
-        str(tmp_path / "out"),
+        str(out_dir),
         fallback_date="2025-06-30",
     )
+    yield dfs, out_dir
+    ckpt.release(*dfs.values())
+
+
+def test_full_pipeline_invariants(spark, pipeline_run):
+    out, out_dir = pipeline_run
     produtos, vendas, empregados = out["produtos"], out["vendas"], out["empregados"]
 
     # dedup: 210→200, 108→100, 1025→1000 (zero loss beyond duplicates)
@@ -232,12 +242,78 @@ def test_full_pipeline_invariants(spark, dirty_csvs, tmp_path):
     # parquet sinks exist and audit columns dropped
     import os
 
-    assert os.path.isdir(str(tmp_path / "out" / "resumo-vendas.parquet"))
-    reread = spark.read.parquet(str(tmp_path / "out" / "resumo-vendas.parquet"))
+    assert os.path.isdir(str(out_dir / "resumo-vendas.parquet"))
+    reread = spark.read.parquet(str(out_dir / "resumo-vendas.parquet"))
     assert set(reread.columns) == {
         "id_venda", "data", "id_produto", "id_empregado",
         "quantidade", "valor_unitario", "valor_total",
     }
+
+
+def test_pipeline_returns_eager_checkpoints(pipeline_run):
+    """Each returned frame is the checkpoint itself (analyzed plan =
+    LogicalRDD), so ``ckpt.release`` accepts it."""
+    dfs, _ = pipeline_run
+    for name, df in dfs.items():
+        plan = df._jdf.queryExecution().analyzed().getClass().getSimpleName()
+        assert plan == "LogicalRDD", f"{name}: {plan}"
+
+
+def test_report_queries_read_no_csv(pipeline_run):
+    """The five report queries read the cleaned rows, never re-running a
+    cleaning chain from its CSV."""
+    from sales_data_etl_pipeline_spark.plans import analytics
+
+    dfs, _ = pipeline_run
+    v, p, e = dfs["vendas"], dfs["produtos"], dfs["empregados"]
+    queries = {
+        "sales_by_employee": analytics.sales_by_employee(v, e),
+        "average_ticket_by_product": analytics.average_ticket_by_product(v, p),
+        "sales_by_category": analytics.sales_by_category(v, p),
+        "top5_employees": analytics.top5_employees(v, e),
+        "sales_by_period": analytics.sales_by_period(v),
+    }
+    for name, df in queries.items():
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        assert "FileScan csv" not in plan, f"{name} scans a CSV:\n{plan}"
+        assert df.count() > 0, name
+
+
+def test_returned_frames_match_sinks(spark, pipeline_run):
+    """Sinks and returned frames hold the same rows: each frame minus its
+    audit columns equals its Parquet sink, row for row."""
+    dfs, out_dir = pipeline_run
+    for name, sink in (("produtos", "produtos"), ("vendas", "resumo-vendas"),
+                       ("empregados", "empregados")):
+        mine = cleaning.drop_audit_columns(dfs[name])
+        stored = spark.read.parquet(str(out_dir / f"{sink}.parquet"))
+        assert mine.columns == stored.columns, name
+        assert mine.exceptAll(stored).count() == 0, name
+        assert stored.exceptAll(mine).count() == 0, name
+
+
+def test_run_pipeline_releases_checkpoints_on_error(spark, dirty_csvs, tmp_path):
+    """A failing sink (output dir is a regular file) leaves no persisted
+    checkpoint behind: the taken checkpoints are released, then the
+    error propagates."""
+    from py4j.protocol import Py4JJavaError
+
+    jsc = spark.sparkContext._jsc
+    not_a_dir = tmp_path / "out"
+    not_a_dir.write_text("")
+    before = set(jsc.getPersistentRDDs().keySet())
+    with pytest.raises(Py4JJavaError, match="ParentNotDirectoryException"):
+        pipeline.run_pipeline(
+            spark,
+            str(dirty_csvs / "produtos.csv"),
+            str(dirty_csvs / "vendas.csv"),
+            str(dirty_csvs / "empregados.csv"),
+            str(not_a_dir),
+            fallback_date="2025-06-30",
+        )
+    # ids rather than the count: the ContextCleaner may free unrelated
+    # blocks meanwhile, which would only lower a count
+    assert set(jsc.getPersistentRDDs().keySet()) <= before
 
 
 def test_formato_invalido_fourth_stage(spark, tmp_path):

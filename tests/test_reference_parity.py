@@ -12,6 +12,7 @@ import os
 import duckdb
 import pytest
 
+from sales_data_etl_pipeline_spark.operators import ckpt
 from sales_data_etl_pipeline_spark.plans import pipeline
 
 REF = "/root/reference"
@@ -20,13 +21,14 @@ REF = "/root/reference"
 @pytest.mark.skipif(not os.path.isdir(REF), reason="reference not available")
 def test_pipeline_matches_reference_blessed_outputs(spark, tmp_path):
     out = str(tmp_path / "out")
-    pipeline.run_pipeline(
+    dfs = pipeline.run_pipeline(
         spark,
         f"{REF}/bases-de-dados/produtos.csv",
         f"{REF}/bases-de-dados/vendas.csv",
         f"{REF}/bases-de-dados/empregados.csv",
         out,
     )
+    ckpt.release(*dfs.values())  # only the sinks are compared
     con = duckdb.connect()
     for t, n_expected in [("produtos", 200), ("empregados", 100), ("resumo-vendas", 1000)]:
         mine = f"read_parquet('{out}/{t}.parquet/*.parquet')"
