@@ -44,6 +44,31 @@ def entry(spark: SparkSession) -> DataFrame:
 # tools/check_correctness.py -> CORRECTNESS_LOCAL.json); drop it once a
 # CORRECTNESS_r*.json row shows it green after the change.
 _CHANGED = [
+    "clean_et_chain",
+    "corpus_dedup_pipeline",
+    "corpus_domain_mixture",
+    "corpus_pack_sequences",
+    "corpus_prep_pipeline",
+    "corpus_shuffle_deterministic",
+    "corpus_token_shards",
+    "dedup_cluster_representatives",
+    "dedup_clusters",
+    "dedup_containment",
+    "dedup_incremental",
+    "events_rfm_segmentation",
+    "events_rolling_active_users",
+    "events_user_value_deciles",
+    "graph_kcore",
+    "graph_label_propagation",
+    "graph_link_prediction",
+    "graph_link_prediction_aa",
+    "graph_pagerank",
+    "graph_triangle_count",
+    "multimodal_phash_pairs",
+    "q11_important_parts",
+    "q15_top_supplier",
+    "similarity_recall_eval",
+    "table_zorder_layout",
     "streaming_dedup",
     "streaming_stream_join",
     "streaming_user_totals",

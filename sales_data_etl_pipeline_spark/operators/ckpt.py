@@ -12,19 +12,34 @@ up as multi-second ``jvmGcTime`` stragglers (the r11 ``graph_kcore``
 [2.53, 12.06] band, reproduced ISOLATED by ``tools/variance_probe.py``
 at 4.72× with 5.6 s stage GC on the slow pass and 0 on the fast ones).
 
-:func:`release` frees a checkpoint's blocks the moment the loop
-supersedes it, bounding an N-round operator's storage residue to ~2
-rounds instead of N (plus the edge table). At cluster scale the same
-discipline bounds executor storage memory: a 30-round peel on 100 TB
-would otherwise hold 30 copies of the node table in block storage.
+Ownership contract — this module is the ONLY caller of
+``localCheckpoint`` in the package and the only place that decides when
+blocks are freed:
 
-``plans.pipeline.run_pipeline`` is a caller too: it checkpoints each
-cleaned table once so the sinks and the report queries share the rows,
-releases them if a later step raises, and otherwise hands them to its
-caller, which releases them once its last query has run (the pipeline
-CLI does so after the PDF report).
+- :func:`checkpoint` takes the checkpoint (eager or lazy, the call
+  site's choice under the r16/r17 ABBA-deadlock rule) and registers it
+  with the innermost open :func:`scope` of the calling thread. With no
+  scope open the checkpoint is unowned and the ContextCleaner frees it
+  once the frame is dropped.
+- :func:`scope` releases everything registered in it on exit, normal
+  or raising. Scopes nest per thread (``foreachBatch`` runs on a py4j
+  callback thread, so a micro-batch's scope is its own). An operator
+  whose whole body is one scope uses it as a decorator,
+  ``@ckpt.scope()`` (the iterative graph loops).
+- :func:`keep` hands checkpoints from the innermost scope to the
+  enclosing one: an operator opens a scope for its working tables and
+  keeps only its result, which then belongs to the CALLER's scope (a
+  test, the pipeline CLI around ``plans.pipeline.run_pipeline``).
+  A lazy checkpoint an operator returns unread (the range pins of
+  ``rank``/``corpus``, BPE's last fold cut) is simply left registered
+  in the caller's scope.
+- :func:`release` frees a checkpoint the moment a loop supersedes it,
+  bounding an N-round operator's storage residue to ~2 rounds instead
+  of N (plus the edge table). At cluster scale the same discipline
+  bounds executor storage memory: a 30-round peel on 100 TB would
+  otherwise hold 30 copies of the node table in block storage.
 
-Contract: pass the EXACT DataFrame returned by ``localCheckpoint``
+Contract: pass the EXACT DataFrame returned by :func:`checkpoint`
 (its analyzed plan is the ``LogicalRDD`` wrapping the persisted RDD —
 a derived ``select``/``filter`` is not it, and :func:`release` raises
 rather than silently unpersisting nothing). After release the blocks
@@ -39,6 +54,7 @@ anyway, so only the blocks the returned plan actually reads matter.
 from __future__ import annotations
 
 import contextlib
+import threading
 
 from pyspark.sql import DataFrame
 
@@ -125,3 +141,47 @@ def release(*dfs: DataFrame | None) -> None:
     with _lineage_warning_silenced(plans[0][0]):
         for _, plan in plans:
             plan.rdd().unpersist(False)
+
+
+#: Per-thread stack of open scopes, innermost last; each scope is the
+#: list of checkpoints it owns.
+_scopes = threading.local()
+
+
+def _stack() -> list[list[DataFrame]]:
+    return _scopes.__dict__.setdefault("stack", [])
+
+
+def checkpoint(df: DataFrame, *, eager: bool = True) -> DataFrame:
+    """``df.localCheckpoint(eager)``, owned by the innermost open scope
+    (unowned — left to the ContextCleaner — when none is open)."""
+    cut = df.localCheckpoint(eager)
+    stack = _stack()
+    if stack:
+        stack[-1].append(cut)
+    return cut
+
+
+@contextlib.contextmanager
+def scope():
+    """Release every checkpoint registered inside on exit, normal or
+    raising."""
+    owned: list[DataFrame] = []
+    _stack().append(owned)
+    try:
+        yield
+    finally:
+        _stack().pop()
+        release(*owned)
+
+
+def keep(*dfs: DataFrame) -> None:
+    """Move ``dfs`` (matched by identity) from the innermost open scope
+    to the enclosing one — unowned when there is no enclosing scope.
+    Frames the innermost scope does not own are ignored."""
+    stack = _stack()
+    ids = {id(df) for df in dfs}
+    moved = [f for f in stack[-1] if id(f) in ids]
+    stack[-1][:] = [f for f in stack[-1] if id(f) not in ids]
+    if len(stack) > 1:
+        stack[-2].extend(moved)

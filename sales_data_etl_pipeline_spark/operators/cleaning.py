@@ -320,10 +320,10 @@ def backfill_sequential_ids(
     |partitions|-row offsets job → partition-local window), so no
     single reducer ever holds the whole NULL slice. Same output by
     construction when ``order_col`` is unique within the slice —
-    pinned by ``tests/test_cleaning.py``. Distributed mode retains one
-    NULL-slice-sized ``localCheckpoint`` block set for the session
-    (the range-partition pin the returned plan reads — see
-    :func:`rank.distributed_row_number`'s block-retention note); a
+    pinned by ``tests/test_cleaning.py``. Distributed mode leaves one
+    NULL-slice-sized checkpoint block set owned by the caller's
+    ``ckpt.scope()`` (the range-partition pin the returned plan reads —
+    see :func:`rank.distributed_row_number`'s block-ownership note); a
     backfill is once-per-load, so the residue is one slice, not a
     per-round accumulation.
     """

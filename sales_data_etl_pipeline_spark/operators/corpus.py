@@ -30,6 +30,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from sales_data_etl_pipeline_spark.operators import ckpt
 from sales_data_etl_pipeline_spark.operators.dedup import hash_id_expr, hash_id_sql
 
 #: Bucket granularity for split/sample fractions (resolution 0.01%).
@@ -154,17 +155,19 @@ def shard_by_token_budget(
     training-data pipeline. The global prefix sum runs as a distributed
     scan (see module docstring): no stage touches more than
     |partitions| driver-side rows, and no single-partition window exists
-    anywhere in the plan.
+    anywhere in the plan. The range-pin checkpoint the returned plan
+    reads is owned by the caller's ``ckpt.scope()`` (see
+    :func:`rank.distributed_row_number`).
     """
     sc = df.sparkSession.sparkContext
-    d = (
+    d = ckpt.checkpoint(
         df.select(id_col, tokens_col)
         .repartitionByRange(sc.defaultParallelism, F.col(id_col))
-        .withColumn("_pid", F.spark_partition_id())
+        .withColumn("_pid", F.spark_partition_id()),
         # pin the range partitioning: the totals job and the main job must
         # see the SAME partition assignment (the range sampler is not
         # contractually deterministic across jobs)
-        .localCheckpoint(eager=False)
+        eager=False,
     )
     totals = dict(
         d.groupBy("_pid").agg(F.sum(tokens_col).alias("_t")).collect()

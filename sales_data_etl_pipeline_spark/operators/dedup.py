@@ -334,9 +334,7 @@ def minhash_lsh_pairs(
     per_doc_aggs = [*_minhash_aggs(num_hashes), F.count(F.lit(1)).alias("sz")]
     if verify == "sets":
         per_doc_aggs.append(F.collect_list("sh").alias("_shset"))
-    per_doc = (
-        ids.groupBy("doc_id").agg(*per_doc_aggs).localCheckpoint(eager=True)
-    )
+    per_doc = ckpt.checkpoint(ids.groupBy("doc_id").agg(*per_doc_aggs))
     band_sig = _band_signatures_df(per_doc, num_hashes, bands)
     a, b = band_sig.alias("a"), band_sig.alias("b")
     candidates = (
@@ -512,7 +510,7 @@ def simhash_pairs_banded(
     # Pin the fingerprint table: four plan branches below (distinct
     # signatures, two membership sides, the hamming-0 self-join) would
     # each recompute the explode×32 + double groupBy otherwise.
-    fp = simhash_fingerprints(df, text_col).localCheckpoint(eager=True)
+    fp = ckpt.checkpoint(simhash_fingerprints(df, text_col))
     # Hot-bucket guard (VERDICT r2): near-dup clusters put MANY docs with
     # the IDENTICAL fingerprint into the same (blk, val) buckets, and the
     # doc-level equi-join re-quadratices inside them. Band over DISTINCT
@@ -779,6 +777,7 @@ def embedding_lsh_pairs(
     )
 
 
+@ckpt.scope()
 def connected_components(
     pairs: DataFrame,
     *,
@@ -810,9 +809,9 @@ def connected_components(
     bigger budget.
     """
     if max_iterations < 0:
-        # a negative budget would skip every round, leave the returned
-        # labels reading the released edge checkpoint, and mask the
-        # misuse via release(prev_ckpt=None) — fail loudly at entry
+        # a negative budget would skip every round and return labels
+        # still reading the edge checkpoint this operator's scope
+        # releases — fail loudly at entry
         raise ValueError(
             f"max_iterations must be >= 0, got {max_iterations}"
         )
@@ -839,12 +838,11 @@ def connected_components(
     # this table concurrently, and lazy first-materialization from
     # concurrent stages deadlocks ABBA on the RDDCheckpointData lock
     # (r16, pagerank's twin).
-    edges = (
+    edges = ckpt.checkpoint(
         sym.unionByName(
             sym.select(F.col("src").alias("src"), F.col("src").alias("dst"))
         )
         .distinct()
-        .localCheckpoint(eager=True)
     )
     labels = (
         edges.select(F.col("src").alias("node"))
@@ -909,9 +907,8 @@ def connected_components(
 
     while not converged and rounds < budget:
         obs_a, obs_b = Observation(), Observation()
-        updated = step(step(labels, obs_a), obs_b).localCheckpoint(
-            eager=True
-        )  # ONE action runs both rounds
+        # ONE action runs both rounds
+        updated = ckpt.checkpoint(step(step(labels, obs_a), obs_b))
         # prior labels' blocks were consumed by the pair job above —
         # release at supersession (ckpt module doc: residue ~2 rounds)
         ckpt.release(prev_ckpt)
@@ -921,9 +918,7 @@ def connected_components(
         elif rounds + 2 <= budget and _changed(obs_b) == 0:
             converged = True  # round rounds+2, still within budget
         rounds += 2
-    ckpt.release(edges)  # labels are materialized; edges done either way
     if not converged:
-        ckpt.release(prev_ckpt)
         raise RuntimeError(
             f"connected_components did not converge in {max_iterations} "
             "iterations plus the confirmation round (labels still "
@@ -931,6 +926,7 @@ def connected_components(
             "— retry with a larger max_iterations (propagation crosses one "
             "edge per round)"
         )
+    ckpt.keep(labels)  # the scope frees edges and every earlier round
     return labels.select(F.col("node").alias("doc_id"), "component")
 
 
@@ -1028,7 +1024,7 @@ def minhash_lsh_incremental(
     tagged = sh_base.withColumn("_is_base", F.lit(True)).unionByName(
         sh_inc.withColumn("_is_base", F.lit(False))
     )
-    pd_all = (
+    pd_all = ckpt.checkpoint(
         tagged.select(
             "doc_id",
             "_is_base",
@@ -1039,7 +1035,6 @@ def minhash_lsh_incremental(
         .agg(*aggs)
         # EAGER: consumed by both band builds and both verify sides —
         # concurrent stages of one action (the r16 ABBA rule)
-        .localCheckpoint(eager=True)
     )
     base_pd = pd_all.filter(F.col("_is_base")).drop("_is_base")
     inc_pd = pd_all.filter(~F.col("_is_base")).drop("_is_base")
@@ -1206,10 +1201,9 @@ def minhash_lsh_incremental_prepared(
     ids_inc = sh_inc.select(
         "doc_id", "sh", F.expr(hash_id_expr("sh", MINHASH_P)).alias("sid")
     )
-    inc_pd = (
+    inc_pd = ckpt.checkpoint(
         ids_inc.groupBy("doc_id")
         .agg(*_minhash_aggs(num_hashes), F.count(F.lit(1)).alias("sz"))
-        .localCheckpoint(eager=True)
     )
     candidates = (
         base_bs.select(F.col("doc_id").alias("base_id"), "band", "sig")
@@ -1327,7 +1321,7 @@ def containment_pairs(
     sh = shingle_sets(df, text_col, n)
     if max_shingle_df is not None:
         sh = _drop_hot_shingles(sh, max_shingle_df, site="containment:shingle_df")
-    sh = sh.localCheckpoint(eager=True)
+    sh = ckpt.checkpoint(sh)
     sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("sz"))
     a, b = sh.alias("a"), sh.alias("b")
     inter = (
@@ -1398,7 +1392,7 @@ def minhash_containment_pairs(
         sh = _drop_hot_shingles(sh, max_shingle_df, site="minhash_containment:shingle_df")
     # one materialization for the signature aggregate + the two
     # candidate-side intersection joins (same move as containment_pairs)
-    sh = sh.localCheckpoint(eager=True)
+    sh = ckpt.checkpoint(sh)
     ids = sh.select(
         "doc_id", F.expr(hash_id_expr("sh", MINHASH_P)).alias("sid")
     )
@@ -1486,7 +1480,7 @@ def containment_incremental(
     sh_base = shingle_sets(base, text_col, n)
     if max_shingle_df is not None:
         sh_base = _drop_hot_shingles(sh_base, max_shingle_df, site="containment_incremental:shingle_df")
-    sh_inc = shingle_sets(incoming, text_col, n).localCheckpoint(eager=True)
+    sh_inc = ckpt.checkpoint(shingle_sets(incoming, text_col, n))
     sizes_inc = sh_inc.groupBy("doc_id").agg(F.count(F.lit(1)).alias("sz_inc"))
     inter = (
         sh_base.select(F.col("doc_id").alias("base_id"), "sh")
@@ -1511,6 +1505,7 @@ def containment_incremental(
     )
 
 
+@ckpt.scope()
 def pagerank(
     pairs: DataFrame,
     *,
@@ -1557,7 +1552,7 @@ def pagerank(
     this took the operator from 31 scheduled jobs to ~8).
     """
     width = shuffle_width(pairs)
-    edges = (
+    edges = ckpt.checkpoint(
         pairs.select(F.col(id_a).alias("src"), F.col(id_b).alias("dst"))
         .unionByName(
             pairs.select(F.col(id_b).alias("src"), F.col(id_a).alias("dst"))
@@ -1576,16 +1571,14 @@ def pagerank(
         # before the action that shares it.
         .repartition(width, "src")
         .dropDuplicates()
-        .localCheckpoint(eager=True)
     )
     deg = edges.groupBy("src").agg(F.count(F.lit(1)).alias("deg"))
     n_nodes = deg.agg(F.count(F.lit(1)).alias("_n"))
-    base = (
+    base = ckpt.checkpoint(
         deg.select(F.col("src").alias("node"), "deg")
         .crossJoin(F.broadcast(n_nodes))
         # static (node, deg, _n) table; eager for the same
         # concurrent-consumer reason as edges
-        .localCheckpoint(eager=True)
     )
     ranks = base.select(
         "node", "deg", F.expr("1000000000L div _n").alias("rank_ppb")
@@ -1611,16 +1604,15 @@ def pagerank(
             ).alias("rank_ppb"),
         )
         if i % ckpt_every == 0 and i < iterations:
-            ranks = ranks.localCheckpoint(eager=True)
+            ranks = ckpt.checkpoint(ranks)
             ckpt.release(cadence)
             cadence = ranks
-    # materialize the final ranks once, then free the loop's working
-    # tables — the returned frame reads only its own blocks. Runs on
-    # iterations=0 too: edges/base are built EAGERLY above, so gating
-    # this on iterations>0 permanently leaked their block sets on the
-    # zero-round path (r16 ADVICE).
-    ranks = ranks.localCheckpoint(eager=True)
-    ckpt.release(edges, base, cadence)
+    # materialize the final ranks once and keep only them — the scope
+    # frees the loop's working tables (edges, base, the last cadence
+    # cut), iterations=0 included: the returned frame reads only its
+    # own blocks.
+    ranks = ckpt.checkpoint(ranks)
+    ckpt.keep(ranks)
     return ranks.select(F.col("node").alias("doc_id"), "rank_ppb")
 
 
@@ -1800,12 +1792,11 @@ def winnow_pairs(
         .filter(F.col("_df") <= max_df)
         .select("fp_hash")
     )
-    capped = fpd.join(df_ok, "fp_hash").localCheckpoint(
-        eager=True
-    )  # consumed 3× (sizes + both join sides); exchange reuse does
-    # NOT cover all three references in the full pairing plan (r16
-    # probe: dropping this cut re-ran the md5 kernel — task count
-    # 73 → 135 — for zero wall gain), so the cut stays
+    # consumed 3× (sizes + both join sides); exchange reuse does NOT
+    # cover all three references in the full pairing plan (r16 probe:
+    # dropping this cut re-ran the md5 kernel — task count 73 → 135 —
+    # for zero wall gain), so the cut stays
+    capped = ckpt.checkpoint(fpd.join(df_ok, "fp_hash"))
     sizes = capped.groupBy(id_col).agg(F.count(F.lit(1)).alias("nfp"))
     a = capped.select(F.col(id_col).alias("doc_a"), "fp_hash")
     b = capped.select(F.col(id_col).alias("doc_b"), "fp_hash")
@@ -1838,6 +1829,7 @@ def winnow_pairs(
     )
 
 
+@ckpt.scope()
 def label_propagation(
     pairs: DataFrame,
     *,
@@ -1876,7 +1868,7 @@ def label_propagation(
     # concurrent first-materialization of a lazy local checkpoint
     # deadlocks ABBA on the global RDDCheckpointData lock vs the RDD
     # monitor (hit live at r16 in pagerank's twin of this table)
-    edges = fwd.union(rev).distinct().localCheckpoint(eager=True)
+    edges = ckpt.checkpoint(fwd.union(rev).distinct())
     labels = (
         edges.select("src").distinct()
         .select(F.col("src").alias("node"), F.col("src").alias("label"))
@@ -1905,15 +1897,13 @@ def label_propagation(
             .select(F.col("src").alias("node"), F.col("_m.label").alias("label"))
         )
         if i % ckpt_every == 0 and i < iterations:
-            labels = labels.localCheckpoint(eager=True)
+            labels = ckpt.checkpoint(labels)
             ckpt.release(cadence)
             cadence = labels
-    # materialize the final labels once, then free the loop tables.
-    # Runs on iterations=0 too: edges is built EAGERLY above, so gating
-    # this on iterations>0 leaked its block set on the zero-round path
-    # (r16 ADVICE; pagerank's twin fix).
-    labels = labels.localCheckpoint(eager=True)
-    ckpt.release(edges, cadence)
+    # materialize the final labels once and keep only them; the scope
+    # frees the loop tables, iterations=0 included (pagerank's twin)
+    labels = ckpt.checkpoint(labels)
+    ckpt.keep(labels)
     return labels.select(F.col("node").alias("doc_id"), "label")
 
 
@@ -2047,7 +2037,7 @@ def triangle_counts(
     clustering signal).
     """
     fwd = pairs.select(F.col(id_a).alias("u"), F.col(id_b).alias("v"))
-    edges = (
+    edges = ckpt.checkpoint(
         fwd.union(
             pairs.select(F.col(id_b).alias("u"), F.col(id_a).alias("v"))
         )
@@ -2066,7 +2056,6 @@ def triangle_counts(
         # wedge references recompute one cheap narrow join over these
         # materialized blocks, which beats a second serialized
         # materialization round trip (15 → ~11 scheduled jobs).
-        .localCheckpoint(eager=True)
     )
     deg = edges.groupBy("u").agg(F.count(F.lit(1)).alias("deg"))
     ranked = edges.join(deg, "u").join(
@@ -2096,6 +2085,7 @@ def triangle_counts(
     )
 
 
+@ckpt.scope()
 def kcore_decompose(
     pairs: DataFrame,
     *,
@@ -2140,12 +2130,12 @@ def kcore_decompose(
     degree INSIDE the core (≥ k by construction). Nodes peeled away —
     including every node of a graph with no k-core — are absent.
     """
-    edges = (
+    edges = ckpt.checkpoint(
         pairs.select(F.col(id_a).alias("u"), F.col(id_b).alias("v"))
         .unionByName(
             pairs.select(F.col(id_b).alias("u"), F.col(id_a).alias("v"))
         )
-        .distinct()
+        .distinct(),
         # consumed once per round (the decrement join) across every
         # round — without the cut each round re-derives the pair
         # lineage (at minhash-LSH cost) from scratch. LAZY is safe
@@ -2154,10 +2144,10 @@ def kcore_decompose(
         # core-table checkpoint job below, so no concurrent stage can
         # race the RDDCheckpointData lock; every later reader sees
         # already-materialized blocks.
-        .localCheckpoint(eager=False)
+        eager=False,
     )
     obs0 = Observation()
-    core = (
+    core = ckpt.checkpoint(
         edges.groupBy("u")
         .agg(F.count(F.lit(1)).alias("core_degree"))
         .observe(obs0, F.count(F.lit(1)).alias("n"))
@@ -2165,7 +2155,6 @@ def kcore_decompose(
         # initial degree table in ONE job that also carries the
         # initial alive count — the r16 shape paid a separate
         # alive.count() action for it
-        .localCheckpoint(eager=True)
     )
     prev = obs0.get["n"]
     for _ in range(max_iterations + 1):
@@ -2176,7 +2165,7 @@ def kcore_decompose(
             .agg(F.count(F.lit(1)).alias("_dec"))
         )
         obs = Observation()
-        survivors = (
+        survivors = ckpt.checkpoint(
             core.filter(F.col("core_degree") >= k)
             .join(dec, "u", "left")
             .select(
@@ -2186,7 +2175,7 @@ def kcore_decompose(
                 ).alias("core_degree"),
             )
             .observe(obs, F.count(F.lit(1)).alias("n"))
-            .localCheckpoint(eager=True)  # cut lineage + run observed job
+            # cut lineage + run observed job
         )
         n = obs.get["n"]
         # the prior round's core blocks were consumed by the eager
@@ -2196,10 +2185,9 @@ def kcore_decompose(
         ckpt.release(core)
         core = survivors
         if n == prev:
-            ckpt.release(edges)  # result is materialized; edges done
+            ckpt.keep(survivors)  # the scope frees edges
             return survivors.select(F.col("u").alias("doc_id"), "core_degree")
         prev = n
-    ckpt.release(edges, core)
     raise RuntimeError(
         f"kcore_decompose did not converge in {max_iterations} peeling "
         "rounds plus the confirmation round: the peel cascade is deeper "
@@ -2237,7 +2225,7 @@ def link_prediction_jaccard(
     min_common``; jaccard_ppm = common·10⁶ trunc-div (deg_a + deg_b −
     common), exact integers.
     """
-    edges = (
+    edges = ckpt.checkpoint(
         pairs.select(F.col(id_a).alias("u"), F.col(id_b).alias("v"))
         .unionByName(
             pairs.select(F.col(id_b).alias("u"), F.col(id_a).alias("v"))
@@ -2247,7 +2235,6 @@ def link_prediction_jaccard(
         # — mutually independent stages of ONE action, so EAGER (lazy
         # first-materialization from concurrent stages deadlocks ABBA
         # on the RDDCheckpointData lock; r16, hit live in pagerank)
-        .localCheckpoint(eager=True)
     )
     deg = catalog.observe_cap_drops(
         edges.groupBy("u").agg(F.count(F.lit(1)).alias("deg")),
@@ -2312,14 +2299,13 @@ def link_prediction_adamic_adar(
     Output: (id_a < id_b, common, aa_q6) over NON-edges with
     ``common ≥ min_common``.
     """
-    edges = (
+    edges = ckpt.checkpoint(
         pairs.select(F.col(id_a).alias("u"), F.col(id_b).alias("v"))
         .unionByName(
             pairs.select(F.col(id_b).alias("u"), F.col(id_a).alias("v"))
         )
         .distinct()
         # EAGER: same concurrent-consumer exposure as the jaccard twin
-        .localCheckpoint(eager=True)
     )
     deg = catalog.observe_cap_drops(
         edges.groupBy("u").agg(F.count(F.lit(1)).alias("deg")),

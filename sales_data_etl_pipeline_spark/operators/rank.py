@@ -22,6 +22,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from sales_data_etl_pipeline_spark.operators import ckpt
+
 
 def distributed_row_number(
     df: DataFrame,
@@ -36,25 +38,22 @@ def distributed_row_number(
     Returns ``(df + rank_col, total_row_count)`` — the count falls out
     of the offsets job for free.
 
-    Block retention: the internal lazy ``localCheckpoint`` that pins
-    the range partitioning is materialized by the offsets job and STAYS
-    persisted for the session — the returned plan reads those blocks,
+    Block ownership: the internal lazy checkpoint that pins the range
+    partitioning is materialized by the offsets job and is owned by the
+    caller's ``ckpt.scope()`` — the returned plan reads those blocks,
     so they cannot be released here (releasing them would make every
     later read fail with block-not-found by the ckpt-module contract).
-    The residue is ONE block set sized to the ranked slice per call;
-    callers that rank repeatedly in one session and need the storage
-    back can ``localCheckpoint(eager=True)`` the materialized RESULT
-    and release this function's input — the same copy-then-free move
-    ``bpe_train_merges`` uses.
+    The scope's exit frees them; with no scope open the ContextCleaner
+    does once the result is dropped.
     """
     sc = df.sparkSession.sparkContext
-    d = (
+    d = ckpt.checkpoint(
         df.repartitionByRange(sc.defaultParallelism, *order_by)
-        .withColumn("_pid", F.spark_partition_id())
+        .withColumn("_pid", F.spark_partition_id()),
         # pin the range partitioning: the offsets job and the main job
         # must see the SAME partition assignment (the range sampler is
         # not contractually deterministic across jobs)
-        .localCheckpoint(eager=False)
+        eager=False,
     )
     counts = dict(d.groupBy("_pid").count().collect())
     if not counts:

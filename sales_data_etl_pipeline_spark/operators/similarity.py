@@ -17,6 +17,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from sales_data_etl_pipeline_spark.operators import ckpt
+
 
 def _dot(a: str, b: str) -> str:
     return (
@@ -1433,13 +1435,13 @@ def _grid_vectors(
     assignment) rescans them."""
     from sales_data_etl_pipeline_spark.operators.dedup import FINITE_VEC
 
-    return (
+    return ckpt.checkpoint(
         corpus.filter(F.expr(FINITE_VEC.format(v=vec_col)))
         .select(
             F.col(id_col).alias("_vid"),
             F.expr(_PQ_GRID.format(v=vec_col)).alias("_gv"),
-        )
-        .localCheckpoint(eager=False)  # reused every iteration
+        ),
+        eager=False,  # reused every iteration
     )
 
 
@@ -1548,7 +1550,7 @@ def semantic_dedup(
     cents = _lloyd_train_grid(spark, g, k=k, iterations=iterations)
     if not cents:
         return spark.createDataFrame([], out_schema)
-    assigned = (
+    assigned = ckpt.checkpoint(
         _assign_grid(cents, g)
         .withColumn(
             "_n2",
@@ -1557,7 +1559,7 @@ def semantic_dedup(
                 " (acc, x) -> acc + x)"
             ),
         )
-        .localCheckpoint(eager=True)  # consumed 3× below (a, b, out)
+        # consumed 3× below (a, b, out)
     )
     a = assigned.select(
         F.col("_vid").alias("_aid"),

@@ -1178,15 +1178,12 @@ def bpe_train_merges(
     Returns (merge_rank, left_sym, right_sym, pair_count) for rounds
     1..n_merges.
     """
-    track: list[DataFrame] = []
-    merges, _, _ = _bpe_train_full(
-        df, n_merges=n_merges, text_col=text_col, track=track
-    )
     # merges is a LOCAL relation (driver-fetched winners) — nothing to
-    # copy; free every per-round vocabulary block set the training
-    # loop persisted (the final round's lazy checkpoint was never
-    # materialized on this path and unpersists as a no-op)
-    ckpt.release(*track)
+    # keep; the scope frees every per-round vocabulary block set the
+    # training loop persisted (the final round's lazy checkpoint was
+    # never materialized on this path and unpersists as a no-op)
+    with ckpt.scope():
+        merges, _, _ = _bpe_train_full(df, n_merges=n_merges, text_col=text_col)
     return merges
 
 
@@ -1246,7 +1243,6 @@ def _bpe_train_full(
     *,
     n_merges: int,
     text_col: str,
-    track: list[DataFrame] | None = None,
 ) -> tuple[DataFrame, DataFrame, list[tuple[int, str, str, int]]]:
     """(merge rules frame, final (word, wc, syms) vocabulary table,
     rules as plain tuples) — the shared body of
@@ -1268,15 +1264,9 @@ def _bpe_train_full(
 
     A no-pairs round ends training (folds never split symbols, so
     pairs stay empty forever — identical to the former no-op rounds).
-
-    ``track``, when given, collects every per-round checkpointed
-    vocabulary frame so the caller can :func:`~sales_data_etl_
-    pipeline_spark.operators.ckpt.release` the superseded rounds once
-    the frame it actually needs is materialized — without it a
-    32k-merge production run holds 32k vocabulary-table block sets
-    until two garbage collectors drain them. Round r's winner
-    aggregate is the action that materializes round r-1's checkpoint,
-    so per-round lineage stays one round deep."""
+    Round r's winner aggregate is the action that materializes round
+    r-1's lazy checkpoint, so per-round lineage stays one round deep;
+    every round's checkpoint belongs to the caller's scope."""
     toks = df.select(
         F.explode(F.expr(TOKENIZE.format(col=text_col))).alias("word")
     )
@@ -1307,13 +1297,9 @@ def _bpe_train_full(
         if w is None or w["sym"] is None:
             break  # single-symbol vocabulary: no pairs now or ever
         rules.append((rank, w["sym"], w["nxt"], -w["_n"]))
-        surv = surv.select(
-            "word",
-            "wc",
-            F.expr(_bpe_fold_expr(w["sym"], w["nxt"])).alias("syms"),
-        ).localCheckpoint(eager=False)  # cut the per-round lineage
-        if track is not None:
-            track.append(surv)
+        fold = F.expr(_bpe_fold_expr(w["sym"], w["nxt"])).alias("syms")
+        # cut the per-round lineage
+        surv = ckpt.checkpoint(surv.select("word", "wc", fold), eager=False)
     out = df.sparkSession.createDataFrame(rules, _BPE_RULES_SCHEMA)
     return out, surv, rules
 
@@ -1611,17 +1597,18 @@ def bpe_apply_token_counts(
     Returns (doc_id, n_words, n_chars_tokenized, n_symbols). Docs
     whose tokenization is empty drop out (no words to count).
     """
-    track: list[DataFrame] = []
-    _, final_surv, _ = _bpe_train_full(
-        df, n_merges=n_merges, text_col=text_col, track=track
-    )
-    if len(track) > 1:
-        # final_surv's lazy checkpoint still READS the previous round's
-        # blocks, so materialize it once (the job the caller's action
-        # would have run anyway), then free every superseded round —
-        # the output join below reads only final_surv
-        final_surv.count()
-        ckpt.release(*(f for f in track if f is not final_surv))
+    with ckpt.scope():
+        _, final_surv, rules = _bpe_train_full(
+            df, n_merges=n_merges, text_col=text_col
+        )
+        if len(rules) > 1:
+            # final_surv's lazy checkpoint still READS the previous
+            # round's blocks, so materialize it once (the job the
+            # caller's action would have run anyway) before the scope
+            # frees every superseded round — the output join below
+            # reads only final_surv
+            final_surv.count()
+        ckpt.keep(final_surv)
     wsym = final_surv.select("word", F.size("syms").alias("_nsym"))
     dw = df.select(
         id_col,
@@ -1711,13 +1698,12 @@ def bpe_apply_oov_token_counts(
         # 0 would divide by zero mid-replay and a negative batch would
         # silently never cut the fold stack — fail loudly at entry
         raise ValueError(f"fold_batch must be >= 1, got {fold_batch}")
-    track: list[DataFrame] = []
-    _, _, rules = _bpe_train_full(
-        train, n_merges=n_merges, text_col=text_col, track=track
-    )
-    # the rules live on the driver; every train-side round block set
-    # is releasable immediately
-    ckpt.release(*track)
+    # the rules live on the driver; the scope frees every train-side
+    # round block set immediately
+    with ckpt.scope():
+        _, _, rules = _bpe_train_full(
+            train, n_merges=n_merges, text_col=text_col
+        )
     dw = eval_docs.select(
         id_col,
         F.explode(F.expr(TOKENIZE.format(col=text_col))).alias("word"),
@@ -1745,15 +1731,16 @@ def bpe_apply_oov_token_counts(
     # expression tree the analyzer/codegen choke on. EAGER because the
     # single-consumer chain makes lazy legal but eager also releases
     # the superseded batch immediately (block residue ~1 batch, not
-    # n_merges/fold_batch). Gate-scale replays (n_merges ≤ fold_batch)
-    # never hit the cut — identical plan, zero extra jobs.
+    # n_merges/fold_batch). The last cut is read by the returned plan,
+    # so the caller's scope owns it. Gate-scale replays (n_merges ≤
+    # fold_batch) never hit the cut — identical plan, zero extra jobs.
     prev_cut: DataFrame | None = None
     for i, (_rank, left_sym, right_sym, _cnt) in enumerate(rules, 1):
         surv = surv.select(
             "word", F.expr(_bpe_fold_expr(left_sym, right_sym)).alias("syms")
         )
         if i % fold_batch == 0 and i < len(rules):
-            surv = surv.localCheckpoint(eager=True)
+            surv = ckpt.checkpoint(surv)
             ckpt.release(prev_cut)
             prev_cut = surv
     wsym = surv.select("word", F.size("syms").alias("_nsym"))

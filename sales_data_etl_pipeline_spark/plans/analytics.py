@@ -38,6 +38,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from sales_data_etl_pipeline_spark.operators import ckpt
 from sales_data_etl_pipeline_spark.sources.tables import load_testdata
 
 # ---------------------------------------------------------------------------
@@ -1146,15 +1147,15 @@ def td_q15_top_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     MAX…)` never becomes a per-row subquery. Ties: every supplier at
     the max is returned (original Q15 semantics)."""
     t = load_testdata(spark, sf_dir, ("lineitem", "supplier"))
-    rev = (
+    rev = ckpt.checkpoint(
         t["lineitem"]
         .filter(
             (F.col("l_shipdate") >= F.to_timestamp(F.lit("1997-01-01")))
             & (F.col("l_shipdate") < F.to_timestamp(F.lit("1997-04-01")))
         )
         .groupBy("l_suppkey")
-        .agg(_r2(F.sum(_revenue())).alias("total_revenue"))
-        .localCheckpoint(eager=False)  # reuse: supplier rows + global max
+        .agg(_r2(F.sum(_revenue())).alias("total_revenue")),
+        eager=False,  # reuse: supplier rows + global max
     )
     mx = rev.agg(F.max("total_revenue").alias("_mx"))
     return (
@@ -1235,15 +1236,15 @@ def td_q11_important_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
     # then an EXACT bigint sum (order-free across engines) and the
     # 0.1%-share filter is pure integer arithmetic — no double-sum
     # boundary can flip a part in one engine only
-    per_part = (
+    per_part = ckpt.checkpoint(
         t["lineitem"]
         .groupBy("l_partkey")
         .agg(
             F.floor(F.sum(_revenue()) * 100 + F.lit(0.5))
             .cast("long")
             .alias("_cents")
-        )
-        .localCheckpoint(eager=False)  # reuse: per-part rows + global sum
+        ),
+        eager=False,  # reuse: per-part rows + global sum
     )
     total = per_part.agg(
         F.sum("_cents").alias("_tot"), F.count(F.lit(1)).alias("_np")

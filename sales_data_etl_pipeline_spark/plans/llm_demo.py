@@ -15,6 +15,7 @@ from pyspark.sql import functions as F
 
 from sales_data_etl_pipeline_spark.functions import epoch_millis, epoch_seconds
 from sales_data_etl_pipeline_spark.operators import (
+    ckpt,
     corpus,
     dedup,
     pii,
@@ -239,7 +240,7 @@ def corpus_dedup_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     base = _docs(spark, sf_dir).select("doc_id", "text")
     dirty = base.filter(F.col("doc_id") % 20 == 0)
-    docs = (
+    docs = ckpt.checkpoint(
         base.unionByName(
             dirty.select((F.col("doc_id") + 10000).alias("doc_id"), "text")
         )
@@ -252,11 +253,11 @@ def corpus_dedup_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
         .withColumn("n_tokens", F.size(text.tokens("text")))
-        .filter(F.col("n_tokens") >= 20)
+        .filter(F.col("n_tokens") >= 20),
         # one cut for four consumers (exact-keep build, semi probe,
         # minhash input, final anti probe) — the union+tokenize stage
         # otherwise re-derives per consumer
-        .localCheckpoint(eager=False)
+        eager=False,
     )
     exact_keep = (
         docs.groupBy(F.md5("text").alias("_h"))
@@ -1378,10 +1379,10 @@ def corpus_prep_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     # re-runs per consumer (measured ~0.6 s each at sf0.1). At cluster
     # scale this is the stage-boundary write every multi-consumer
     # pipeline stage wants.
-    sized = (
+    sized = ckpt.checkpoint(
         clean.withColumn("n_tokens", F.size(text.tokens("text_clean")))
-        .filter(F.col("n_tokens") >= 20)
-        .localCheckpoint(eager=False)
+        .filter(F.col("n_tokens") >= 20),
+        eager=False,
     )
     keep = (
         sized.groupBy(F.md5("text_clean").alias("_h"))
@@ -3592,14 +3593,14 @@ def corpus_domain_mixture(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcast total (bigint token sums — no double division until
     nothing depends on it)."""
     docs = _docs(spark, sf_dir)
-    per_src = (
+    per_src = ckpt.checkpoint(
         docs.select("source", F.size(text.tokens()).alias("_nt"))
         .groupBy("source")
         .agg(
             F.count(F.lit(1)).alias("n_docs"),
             F.sum("_nt").alias("sum_tokens"),
-        )
-        .localCheckpoint(eager=False)  # reuse: per-source rows + total
+        ),
+        eager=False,  # reuse: per-source rows + total
     )
     total = per_src.agg(F.sum("sum_tokens").alias("_tot"))
     return (
@@ -3724,10 +3725,10 @@ def events_rolling_active_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = _events(spark, sf_dir)
     # |days × users| distinct pairs feed BOTH the report-day list and
     # the fanout — one cut, or the events-scan + distinct runs twice
-    du = (
+    du = ckpt.checkpoint(
         ev.select(F.to_date("ts").alias("d"), "user_id")
-        .distinct()
-        .localCheckpoint(eager=False)
+        .distinct(),
+        eager=False,
     )
     days = du.select(F.col("d").alias("day")).distinct()
     fanned = du.select(
@@ -5596,15 +5597,15 @@ def multimodal_phash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     base = _docs(spark, sf_dir).select(F.col("doc_id").alias("media_id"))
     hashes = multimodal.phash_images(multimodal.synthesize_bmp(base))
-    sigs = (
+    sigs = ckpt.checkpoint(
         hashes.groupBy("phash")
         .agg(
             F.min("media_id").alias("media_id"),
             F.count(F.lit(1)).alias("n_images"),
-        )
+        ),
         # consumed 3× (both banded-join sides + the n_images joins);
         # without the cut the synth+DCT kernel re-runs per consumer
-        .localCheckpoint(eager=False)
+        eager=False,
     )
     pairs = multimodal.phash_pairs_banded(sigs, max_hamming=3)
     n = sigs.select("media_id", "n_images")

@@ -8,7 +8,8 @@ Catalyst sees the whole chain and fuses the narrow stages
 once, as an eager local checkpoint, the way the reference loads each
 cleaned table into PostgreSQL once: the sinks, the report queries and
 the PDF all read those rows instead of re-running the chains from the
-CSVs.
+CSVs. The returned checkpoints are kept to the caller's ``ckpt.scope()``
+(the CLI opens one around the report).
 
 Run order matches the reference orchestrator (``pipeline.py:71-96``):
 produtos → vendas (needs produtos for category enrichment) → empregados
@@ -185,13 +186,13 @@ def run_pipeline(
     write parquet sinks (vendas renamed 'resumo-vendas' per reference
     ``save_data_parquet.py:110-114``), return the clean DataFrames.
 
-    Each cleaned table is an eager ``localCheckpoint``, taken in run
-    order (produtos first: vendas broadcast-joins it), so the sinks and
-    every later query read rows cleaned once, over a truncated lineage.
-    The returned frames are those checkpoints and belong to the caller:
-    ``ckpt.release(*dfs.values())`` frees them, or the ContextCleaner
-    does once the caller drops them. If a step after the first
-    checkpoint raises, every checkpoint taken so far is released before
+    Each cleaned table is an eager checkpoint, taken in run order
+    (produtos first: vendas broadcast-joins it), so the sinks and every
+    later query read rows cleaned once, over a truncated lineage. The
+    returned frames are those checkpoints, kept to the caller's
+    ``ckpt.scope()``: its exit frees them (with no scope open the
+    ContextCleaner does, once the caller drops them). If a step raises,
+    this call's own scope releases every checkpoint taken so far before
     the error propagates."""
     from sales_data_etl_pipeline_spark import schemas
     from sales_data_etl_pipeline_spark.sources.csv import read_csv_with_ordinal
@@ -199,26 +200,20 @@ def run_pipeline(
 
     validate_inputs(produtos_csv, vendas_csv, empregados_csv)
 
-    taken: list[DataFrame] = []
-
-    def materialize(df: DataFrame) -> DataFrame:
-        taken.append(df.localCheckpoint(eager=True))
-        return taken[-1]
-
-    try:
-        produtos = materialize(
+    with ckpt.scope():
+        produtos = ckpt.checkpoint(
             extract_treat_produtos(
                 read_csv_with_ordinal(spark, produtos_csv, schemas.PRODUTOS_RAW)
             )
         )
-        vendas = materialize(
+        vendas = ckpt.checkpoint(
             extract_treat_vendas(
                 read_csv_with_ordinal(spark, vendas_csv, schemas.VENDAS_RAW),
                 produtos,
                 fallback_date=fallback_date,
             )
         )
-        empregados = materialize(
+        empregados = ckpt.checkpoint(
             extract_treat_empregados(
                 read_csv_with_ordinal(spark, empregados_csv, schemas.EMPREGADOS_RAW)
             )
@@ -231,9 +226,7 @@ def run_pipeline(
         write_parquet(
             cleaning.drop_audit_columns(empregados), f"{output_dir}/empregados.parquet"
         )
-    except BaseException:
-        ckpt.release(*taken)
-        raise
+        ckpt.keep(produtos, vendas, empregados)
     return {"produtos": produtos, "vendas": vendas, "empregados": empregados}
 
 
@@ -252,27 +245,24 @@ def main() -> None:
 
     produtos_csv, vendas_csv, empregados_csv, out_dir = sys.argv[1:5]
     spark = get_spark("sales-pipeline")
-    with timed_step("pipeline"):
+    with timed_step("pipeline"), ckpt.scope():
         dfs = run_pipeline(spark, produtos_csv, vendas_csv, empregados_csv, out_dir)
-        try:
-            results = {
-                "sales_by_employee": analytics.sales_by_employee(
-                    dfs["vendas"], dfs["empregados"]
-                ),
-                "average_ticket_by_product": analytics.average_ticket_by_product(
-                    dfs["vendas"], dfs["produtos"]
-                ),
-                "sales_by_category": analytics.sales_by_category(
-                    dfs["vendas"], dfs["produtos"]
-                ),
-                "top5_employees": analytics.top5_employees(
-                    dfs["vendas"], dfs["empregados"]
-                ),
-                "sales_by_period": analytics.sales_by_period(dfs["vendas"]),
-            }
-            path = report.save_report(results, f"{out_dir}/relatorio-final")
-        finally:
-            ckpt.release(*dfs.values())
+        results = {
+            "sales_by_employee": analytics.sales_by_employee(
+                dfs["vendas"], dfs["empregados"]
+            ),
+            "average_ticket_by_product": analytics.average_ticket_by_product(
+                dfs["vendas"], dfs["produtos"]
+            ),
+            "sales_by_category": analytics.sales_by_category(
+                dfs["vendas"], dfs["produtos"]
+            ),
+            "top5_employees": analytics.top5_employees(
+                dfs["vendas"], dfs["empregados"]
+            ),
+            "sales_by_period": analytics.sales_by_period(dfs["vendas"]),
+        }
+        path = report.save_report(results, f"{out_dir}/relatorio-final")
         print(f"report: {path}")
 
 

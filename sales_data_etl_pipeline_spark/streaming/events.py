@@ -644,9 +644,10 @@ def jdbc_upsert_batch_fn(
     same table state — idempotence is what turns the sink's
     at-least-once delivery into effective exactly-once.
 
-    The merged result is materialized (eager ``localCheckpoint``)
-    BEFORE the overwrite: the write drops the very table the lazy read
-    plan would scan, the classic read-overwrite-same-table trap.
+    The merged result is materialized (an eager checkpoint, released
+    when the micro-batch ends) BEFORE the overwrite: the write drops
+    the very table the lazy read plan would scan, the classic
+    read-overwrite-same-table trap.
 
     Target existence is probed through JDBC ``DatabaseMetaData`` rather
     than by catching the read's exception: a blanket except would turn
@@ -689,17 +690,14 @@ def jdbc_upsert_batch_fn(
             merged = merge_ops.upsert(target, batch_df, keys)
         else:  # genuine first batch: nothing to merge with yet
             merged = batch_df
-        materialized = merged.localCheckpoint(eager=True)
-        try:
+        # one scope per micro-batch: a long-running stream would
+        # otherwise leak a table-sized block set per batch until two
+        # garbage collectors drain it (ckpt module doc)
+        with ckpt.scope():
             jdbc_src.write_jdbc(
-                materialized, url, table, mode="overwrite",
+                ckpt.checkpoint(merged), url, table, mode="overwrite",
                 properties=properties,
             )
-        finally:
-            # one checkpoint per micro-batch: a long-running stream
-            # would otherwise leak a table-sized block set per batch
-            # until two garbage collectors drain it (ckpt module doc)
-            ckpt.release(materialized)
 
     return apply_batch
 

@@ -188,18 +188,19 @@ def dirty_csvs(tmp_path_factory):
 @pytest.fixture(scope="module")
 def pipeline_run(spark, dirty_csvs, tmp_path_factory):
     """One pipeline run over the dirty CSVs: (returned frames, output dir).
-    The frames are caller-owned checkpoints, released at teardown."""
+    The frames are checkpoints kept to this fixture's scope, released at
+    teardown."""
     out_dir = tmp_path_factory.mktemp("pipeline") / "out"
-    dfs = pipeline.run_pipeline(
-        spark,
-        str(dirty_csvs / "produtos.csv"),
-        str(dirty_csvs / "vendas.csv"),
-        str(dirty_csvs / "empregados.csv"),
-        str(out_dir),
-        fallback_date="2025-06-30",
-    )
-    yield dfs, out_dir
-    ckpt.release(*dfs.values())
+    with ckpt.scope():
+        dfs = pipeline.run_pipeline(
+            spark,
+            str(dirty_csvs / "produtos.csv"),
+            str(dirty_csvs / "vendas.csv"),
+            str(dirty_csvs / "empregados.csv"),
+            str(out_dir),
+            fallback_date="2025-06-30",
+        )
+        yield dfs, out_dir
 
 
 def test_full_pipeline_invariants(spark, pipeline_run):

@@ -21,14 +21,14 @@ REF = "/root/reference"
 @pytest.mark.skipif(not os.path.isdir(REF), reason="reference not available")
 def test_pipeline_matches_reference_blessed_outputs(spark, tmp_path):
     out = str(tmp_path / "out")
-    dfs = pipeline.run_pipeline(
-        spark,
-        f"{REF}/bases-de-dados/produtos.csv",
-        f"{REF}/bases-de-dados/vendas.csv",
-        f"{REF}/bases-de-dados/empregados.csv",
-        out,
-    )
-    ckpt.release(*dfs.values())  # only the sinks are compared
+    with ckpt.scope():  # only the sinks are compared
+        pipeline.run_pipeline(
+            spark,
+            f"{REF}/bases-de-dados/produtos.csv",
+            f"{REF}/bases-de-dados/vendas.csv",
+            f"{REF}/bases-de-dados/empregados.csv",
+            out,
+        )
     con = duckdb.connect()
     for t, n_expected in [("produtos", 200), ("empregados", 100), ("resumo-vendas", 1000)]:
         mine = f"read_parquet('{out}/{t}.parquet/*.parquet')"
