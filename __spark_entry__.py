@@ -45,6 +45,7 @@ def entry(spark: SparkSession) -> DataFrame:
 # CORRECTNESS_r*.json row shows it green after the change.
 _CHANGED = [
     "clean_et_chain",
+    "clean_keys_chain",
     "corpus_dedup_pipeline",
     "corpus_domain_mixture",
     "corpus_pack_sequences",

@@ -8,15 +8,20 @@ convention: added during cleaning, dropped at the sink
 
 Scale design:
 
-- Grouped medians are computed as a tiny per-group aggregate that is
-  broadcast-joined back, NOT as a window function: a window
-  ``percentile(...) OVER (PARTITION BY g)`` re-sorts the full fact table,
-  while groupBy produces |groups| rows that broadcast for free. The
-  global fallback is a 1-row cross join (broadcast nested loop, no
-  shuffle).
-- Exact medians sort each group's values; at 100 TB switch
-  ``exact=False`` to use ``approx_percentile`` (t-digest sketch,
-  single-pass, mergeable across partitions).
+- Chain-wide values (grouped and global medians, the max id) are window
+  aggregates over the rows being cleaned, not side aggregates joined
+  back: a side aggregate re-plans the whole chain beneath it, so a
+  chain of them fans one table's plan out into a tree of scans and
+  broadcast jobs. The reference's ``read_csv_with_ordinal`` inputs are
+  one partition, which satisfies every window distribution, so the
+  windows add no shuffle and each cleaned table is one linear plan.
+  On multi-partition input ``OVER ()`` gathers all rows into one
+  partition; ``clean_et_chain`` (multi-partition parquet, sf0.1) measured
+  faster than with joined-back aggregates, 6 jobs against 10.
+- Exact medians sort each group's values; ``exact=False`` uses
+  ``approx_percentile`` (t-digest sketch, single pass). Under a window
+  the sketch is built per window partition, so it no longer combines
+  map-side.
 - Keep-first dedup needs an explicit order column — file/ingest order is
   not defined under distributed reads (SURVEY.md §7.4 item 1). Callers
   that genuinely have no order column can pass ``order_col=None`` to get
@@ -163,6 +168,17 @@ def _median_expr(col: str, exact: bool) -> Column:
     return F.expr(f"approx_percentile({col}, 0.5D, 10000)")
 
 
+def _with_medians(df: DataFrame, med: Column, group_col: str) -> DataFrame:
+    """Add ``_grp_med`` (``med`` per ``group_col``) and ``_glob_med``
+    (``med`` over all rows) as window columns. A NULL group key gets no
+    group median — the window would pool NULL keys into one group — so
+    it falls back to the global one."""
+    by_group = med.over(Window.partitionBy(group_col))
+    return df.withColumn(
+        "_grp_med", F.when(F.col(group_col).isNotNull(), by_group)
+    ).withColumn("_glob_med", med.over(Window.partitionBy()))
+
+
 def fill_group_median(
     df: DataFrame,
     col: str,
@@ -185,12 +201,9 @@ def fill_group_median(
     (SURVEY.md §7.4 item 4); the leave-one-out exclusion is vacuous
     because the target's value is NULL (item 3).
 
-    Plan shape: two tiny aggregates (per-group, global) broadcast-joined
-    back onto the fact — no window sort over the fact table.
+    Plan shape: both medians are windows over ``df`` (``_with_medians``)
+    — one linear plan, no side aggregate or join.
     """
-    per_group = df.groupBy(group_col).agg(_median_expr(col, exact).alias("_grp_med"))
-    global_med = df.agg(_median_expr(col, exact).alias("_glob_med"))
-
     fill = F.coalesce(F.col("_grp_med"), F.col("_glob_med"))
     if round_digits is not None:
         # half_even (bround) reproduces Python/pandas round() bit-for-bit
@@ -199,10 +212,7 @@ def fill_group_median(
         rounder = F.bround if round_mode == "half_even" else F.round
         fill = rounder(fill, round_digits)
 
-    out = (
-        df.join(F.broadcast(per_group), on=group_col, how="left")
-        .crossJoin(F.broadcast(global_med))
-    )
+    out = _with_medians(df, _median_expr(col, exact), group_col)
     was_null = F.col(col).isNull()
     if flag_col:
         out = out.withColumn(flag_col, was_null & fill.isNotNull())
@@ -247,25 +257,18 @@ def fill_date_cascade(
     non-blank but unparseable: the reference's 4th stage
     (``et_vendas.py:292-345``) skips the medians for those and assigns
     the fallback date labeled ``formato_invalido``. They are excluded
-    from the median pools either way (their parsed value is NULL).
+    from the median pools either way (their parsed value is NULL, and
+    ``percentile`` skips NULLs).
 
     Date median = percentile over day ordinals; the midpoint of an even
     count lands on ``d.5`` which floors to ``d`` — exactly pandas'
-    midpoint-then-truncate-to-day behavior (item 2).
+    midpoint-then-truncate-to-day behavior (item 2). Both medians are
+    windows over ``df``, as in :func:`fill_group_median`.
     """
-    days = f"unix_date({date_col})"
-    med = (
-        f"percentile({days}, 0.5D)" if exact else f"approx_percentile({days}, 0.5D, 10000)"
-    )
     to_date = lambda c: F.date_from_unix_date(F.floor(c).cast("int"))  # noqa: E731
 
-    valid = df.filter(F.col(date_col).isNotNull())
-    per_group = valid.groupBy(group_col).agg(F.expr(med).alias("_grp_days"))
-    global_med = valid.agg(F.expr(med).alias("_glob_days"))
-
-    out = (
-        df.join(F.broadcast(per_group), on=group_col, how="left")
-        .crossJoin(F.broadcast(global_med))
+    out = _with_medians(
+        df, _median_expr(f"unix_date({date_col})", exact), group_col
     )
     was_null = F.col(date_col).isNull()
     invalid = F.col(invalid_col) if invalid_col else F.lit(False)
@@ -278,8 +281,8 @@ def fill_date_cascade(
             method_col,
             F.when(invalid, F.lit("formato_invalido")).when(
                 was_null,
-                F.when(F.col("_grp_days").isNotNull(), F.lit("mediana_empregado"))
-                .when(F.col("_glob_days").isNotNull(), F.lit("mediana_global"))
+                F.when(F.col("_grp_med").isNotNull(), F.lit("mediana_empregado"))
+                .when(F.col("_glob_med").isNotNull(), F.lit("mediana_global"))
                 .otherwise(F.lit("data_atual")),
             ),
         )
@@ -289,15 +292,15 @@ def fill_date_cascade(
             .when(
                 was_null,
                 F.coalesce(
-                    to_date(F.col("_grp_days")),
-                    to_date(F.col("_glob_days")),
+                    to_date(F.col("_grp_med")),
+                    to_date(F.col("_glob_med")),
                     fallback,
                 ),
             )
             .otherwise(F.col(date_col)),
         )
     )
-    return out.drop("_grp_days", "_glob_days")
+    return out.drop("_grp_med", "_glob_med")
 
 
 # ---------------------------------------------------------------------------
@@ -311,12 +314,13 @@ def backfill_sequential_ids(
     """W2 — NULL ids become ``max_id+1, max_id+2, …`` in ``order_col`` order
     (reference ``et_empregados.py:243-292``).
 
-    The max is a 1-row broadcast; row_number runs only over the NULL-id
-    slice. Default mode ranks that slice with a single-partition window
-    — the cheapest plan for dimension tables (the only place the
-    reference needs it: no extra action, no range shuffle).
-    ``distributed=True`` is the 100 TB fact-backfill mode: the slice
-    ranks via :func:`rank.distributed_row_number` (range-partition →
+    Default mode: the max id and a running count of NULL ids are windows
+    ordered by ``order_col`` over ``df`` — one linear plan, no side
+    aggregate. Like any unpartitioned window it runs in one partition
+    (free on the single-partition dimension reads the reference needs).
+    ``distributed=True`` is the 100 TB fact-backfill mode: the max is a
+    1-row broadcast and the NULL-id slice ranks via
+    :func:`rank.distributed_row_number` (range-partition →
     |partitions|-row offsets job → partition-local window), so no
     single reducer ever holds the whole NULL slice. Same output by
     construction when ``order_col`` is unique within the slice —
@@ -327,24 +331,30 @@ def backfill_sequential_ids(
     backfill is once-per-load, so the residue is one slice, not a
     per-round accumulation.
     """
+    if not distributed:
+        w = Window.orderBy(F.col(order_col).asc())
+        # same ordering as ``seq``: both run in one Window operator, one sort
+        max_id = F.max(id_col).over(
+            w.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
+        )
+        seq = F.count(F.when(F.col(id_col).isNull(), 1)).over(
+            w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
+        )
+        new_id = (F.coalesce(max_id, F.lit(0)) + seq).cast(df.schema[id_col].dataType)
+        return df.withColumn(id_col, F.coalesce(F.col(id_col), new_id))
+
+    from sales_data_etl_pipeline_spark.operators import rank
+
     max_id = df.agg(F.coalesce(F.max(id_col), F.lit(0)).alias("_max_id"))
     nulls_base = df.filter(F.col(id_col).isNull()).crossJoin(
         F.broadcast(max_id)
     )
-    if distributed:
-        from sales_data_etl_pipeline_spark.operators import rank
-
-        ranked, _n = rank.distributed_row_number(
-            nulls_base, [F.col(order_col).asc()], rank_col="_seq"
-        )
-        nulls = ranked.withColumn(
-            id_col, F.col("_max_id") + F.col("_seq")
-        ).drop("_max_id", "_seq")
-    else:
-        w = Window.orderBy(F.col(order_col).asc())
-        nulls = nulls_base.withColumn(
-            id_col, F.col("_max_id") + F.row_number().over(w)
-        ).drop("_max_id")
+    ranked, _n = rank.distributed_row_number(
+        nulls_base, [F.col(order_col).asc()], rank_col="_seq"
+    )
+    nulls = ranked.withColumn(
+        id_col, F.col("_max_id") + F.col("_seq")
+    ).drop("_max_id", "_seq")
     return df.filter(F.col(id_col).isNotNull()).unionByName(nulls)
 
 

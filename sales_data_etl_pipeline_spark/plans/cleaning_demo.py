@@ -15,7 +15,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from sales_data_etl_pipeline_spark.functions import coerce_numeric
-from sales_data_etl_pipeline_spark.operators import ckpt, cleaning
+from sales_data_etl_pipeline_spark.operators import cleaning
 from sales_data_etl_pipeline_spark.sources.tables import load_testdata
 
 
@@ -84,7 +84,7 @@ def clean_keys_chain(spark: SparkSession, sf_dir: str) -> DataFrame:
     with whether its id was in conflict. One supplier scan feeding two
     consumers (the dup-key aggregate and the repair branch) — the
     aggregate side is a map-side-combinable count, the repair side is
-    the W2 single-scalar-max broadcast."""
+    the W2 ordered window (max id and running NULL count)."""
     sup = load_testdata(spark, sf_dir, ("supplier",))["supplier"]
     dirty = sup.select(
         F.when(F.col("s_suppkey") % 9 == 0, F.lit(None))
@@ -125,11 +125,14 @@ def clean_et_chain(
     vendas`` — the chain the reference runs eagerly stage by stage
     (``et_vendas.py:432-471``).
 
-    ``exact=False`` switches both median imputations to
-    ``approx_percentile`` (t-digest): unlike exact ``percentile`` —
-    holistic, every value shuffles to its group's reducer — the sketch
-    combines map-side, so the aggregate traffic drops from O(rows) to
-    O(partitions · sketch) — the 100 TB configuration."""
+    The medians are windows over the deduplicated rows, so the chain is
+    one plan with one scan per table and no side aggregate to re-run:
+    the group windows shuffle by their key and the global ones gather
+    the rows into one partition. ``exact=False`` switches both median
+    imputations to ``approx_percentile`` (t-digest), a bounded sketch
+    per window partition in place of exact ``percentile``'s sorted
+    value buffer; under a window the sketch does not combine
+    map-side."""
     t = load_testdata(spark, sf_dir, ("lineitem", "part"))
     li = t["lineitem"].select(
         "l_orderkey",
@@ -150,15 +153,6 @@ def clean_et_chain(
     df = cleaning.dedup_keep_first(
         li, ["l_orderkey"], ["l_linenumber", "l_partkey", "quantidade"]
     )
-    # lazy pipeline-breaker: every imputation branch downstream (per-group
-    # agg, global agg, main branch — 5 consumers total) re-executes its
-    # input plan; checkpointing once after the dedup aggregate caps the
-    # recomputation at [checkpoint-read + broadcast joins], which is
-    # narrow and cheap. A second checkpoint after the date cascade
-    # measured strictly slower (2.2s vs 1.5s at sf0.1) — it materializes
-    # the wide table again to save only re-running broadcast joins. At
-    # cluster scale this is a stage-boundary write to reliable storage.
-    df = ckpt.checkpoint(df, eager=False)
     df = cleaning.fill_date_cascade(
         df, "data", "l_suppkey", fallback_date="2000-01-01", exact=exact
     )

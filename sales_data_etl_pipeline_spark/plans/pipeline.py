@@ -56,8 +56,11 @@ def extract_treat_vendas(
     for deterministic tests (SURVEY.md §7.4 item 5).
 
     Scale note: the produtos join is a broadcast (dimension ≪ fact); the
-    date/unit medians are tiny grouped aggregates broadcast back — the
-    fact table itself shuffles only for the dedup window.
+    dedup aggregate and the date/unit median windows read the same
+    single-partition CSV scan, so the chain is one linear plan with no
+    shuffle — one job, beside the produtos broadcast. A multi-file fact
+    load would shuffle for the dedup and gather for the global-median
+    windows.
     """
     order = ROW_ORDINAL if ROW_ORDINAL in raw.columns else None
     df = cleaning.dedup_keep_first(raw, ["id_venda"], order)
@@ -121,16 +124,10 @@ def extract_treat_empregados(raw: DataFrame) -> DataFrame:
     df = raw.withColumn("id_empregado", coerce_numeric("id_empregado", "long"))
     # Reference parity: pandas drop_duplicates(subset=['id_empregado'])
     # treats NaN keys as EQUAL (et_empregados.py dedup), so of several
-    # blank-id employees only the first survives — dedup the null slice
-    # to its first row too (limit(1) is dimension-table-only by contract,
-    # like the sequential backfill below).
-    nulls = df.filter(F.col("id_empregado").isNull())
-    nulls = (nulls.orderBy(order) if order else nulls).limit(1)
-    df = cleaning.dedup_keep_first(
-        df.filter(F.col("id_empregado").isNotNull()), ["id_empregado"], order
-    ).unionByName(nulls)
+    # blank-id employees only the first survives — the dedup's groupBy
+    # pools NULL keys into one group too, keeping its first row.
+    df = cleaning.dedup_keep_first(df, ["id_empregado"], order)
     if order:
-        df = df.orderBy(order)
         df = cleaning.backfill_sequential_ids(df, "id_empregado", order)
     else:
         df = cleaning.backfill_sequential_ids(

@@ -39,6 +39,8 @@ def test_fill_group_median_cascade(spark):
             ("a", 1.0), ("a", 3.0), ("a", None),   # group median 2.0
             ("b", None),                            # no valid in group → global
             ("c", 10.0),
+            # NULL keys form no group: their own median would be 51.5
+            (None, 3.0), (None, 100.0), (None, None),
         ],
         "g string, v double",
     )
@@ -51,8 +53,10 @@ def test_fill_group_median_cascade(spark):
     a_filled = [r for r in by_g["a"] if r.imp][0]
     assert a_filled.v == 2.0 and a_filled.met == "mediana_grupo"
     b = by_g["b"][0]
-    assert b.v == 3.0 and b.met == "mediana_global"  # global median of 1,3,10
+    assert b.v == 3.0 and b.met == "mediana_global"  # global median of 1,3,3,10,100
     assert all(not r.imp for r in by_g["c"])
+    null_filled = [r for r in by_g[None] if r.imp][0]
+    assert null_filled.v == 3.0 and null_filled.met == "mediana_global"
 
 
 def test_fill_date_cascade_midpoint_floor(spark):
@@ -315,6 +319,57 @@ def test_run_pipeline_releases_checkpoints_on_error(spark, dirty_csvs, tmp_path)
     # ids rather than the count: the ContextCleaner may free unrelated
     # blocks meanwhile, which would only lower a count
     assert set(jsc.getPersistentRDDs().keySet()) <= before
+
+
+def test_cleaning_chains_scan_their_csv_once(spark, dirty_csvs):
+    """Each cleaning chain is one linear plan: chain-wide medians and the
+    max id are windows, not side aggregates joined back, so the CSV is
+    scanned once and no broadcast nested-loop join appears."""
+    from sales_data_etl_pipeline_spark import schemas
+    from sales_data_etl_pipeline_spark.sources.csv import read_csv_with_ordinal
+
+    def raw(name, schema):
+        return read_csv_with_ordinal(spark, str(dirty_csvs / f"{name}.csv"), schema)
+
+    produtos = spark.createDataFrame(
+        [(1, "Cat")], "id_produto long, categoria string"
+    )
+    chains = {
+        "produtos": pipeline.extract_treat_produtos(raw("produtos", schemas.PRODUTOS_RAW)),
+        "vendas": pipeline.extract_treat_vendas(
+            raw("vendas", schemas.VENDAS_RAW), produtos, fallback_date="2025-06-30"
+        ),
+        "empregados": pipeline.extract_treat_empregados(
+            raw("empregados", schemas.EMPREGADOS_RAW)
+        ),
+    }
+    for name, df in chains.items():
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        assert plan.count("FileScan csv") == 1, f"{name}:\n{plan}"
+        assert "BroadcastNestedLoopJoin" not in plan, f"{name}:\n{plan}"
+
+
+def test_run_pipeline_schedules_at_most_seven_jobs(spark, dirty_csvs, tmp_path):
+    """One job per cleaned table plus its sink (and the produtos
+    broadcast into vendas): side aggregates joined back would schedule
+    a job per aggregate."""
+    sc = spark.sparkContext
+    group = "test_run_pipeline_jobs"
+    sc.setJobGroup(group, group)
+    try:
+        with ckpt.scope():
+            pipeline.run_pipeline(
+                spark,
+                str(dirty_csvs / "produtos.csv"),
+                str(dirty_csvs / "vendas.csv"),
+                str(dirty_csvs / "empregados.csv"),
+                str(tmp_path / "out"),
+                fallback_date="2025-06-30",
+            )
+    finally:
+        sc._jsc.clearJobGroup()
+    jobs = sc.statusTracker().getJobIdsForGroup(group)
+    assert len(jobs) <= 7, jobs
 
 
 def test_formato_invalido_fourth_stage(spark, tmp_path):

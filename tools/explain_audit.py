@@ -7,7 +7,7 @@ flags plan smells:
 - CartesianProduct where not expected (brute-force ops excepted)
 - sort-merge joins where a dimension broadcast was expected
 
-Usage: python tools/explain_audit.py [sf_dir]
+Usage: python tools/explain_audit.py [sf_dir [name ...]]  (default: HEADLINE)
 """
 
 from __future__ import annotations
@@ -24,7 +24,6 @@ from sales_data_etl_pipeline_spark.session import get_spark
 #: Queries allowed to contain a cartesian/nested-loop product (pairwise or
 #: broadcast-scalar plans).
 CARTESIAN_OK = {
-    "clean_et_chain",  # 1-row global-median broadcast (fill_group_median)
     "text_unigram_logprob",  # 1-row corpus-total broadcast (text.py crossJoin)
     # 1-row (s_total, t_total) broadcast onto the 1024-row bucket model
     # (corpus.dsir_weights) — same class as the unigram corpus total
@@ -35,8 +34,6 @@ CARTESIAN_OK = {
     "dedup_ngram_jaccard",
     "similarity_topk",
     "similarity_topk_ivf",
-    # 1-row global-MAX broadcast inside backfill_sequential_ids (W2)
-    "clean_keys_chain",
     # 1-row global-average-balance broadcast (scalar-subquery pattern);
     # the BroadcastNestedLoopJoin carries exactly one build-side row
     "q22_dormant_customers",
@@ -104,7 +101,7 @@ def main() -> int:
     spark = get_spark("explain-audit")
     qs = entrymod.queries()
     smells: list[str] = []
-    for name in HEADLINE:
+    for name in sys.argv[2:] or HEADLINE:
         if name.startswith("streaming"):
             continue
         df = qs[name](spark, sf_dir)
