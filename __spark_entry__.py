@@ -23,7 +23,7 @@ from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from sales_data_etl_pipeline_spark.plans import analytics, cleaning_demo, llm_demo
 

@@ -15,10 +15,12 @@ import json
 import os
 import sys
 import time
+from contextlib import nullcontext
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 import __spark_entry__ as entrymod
+from sales_data_etl_pipeline_spark.profile import job_group
 from sales_data_etl_pipeline_spark.session import get_spark
 
 #: Headline set: covers the engine spine (scan→join→agg→sort→topk), the
@@ -294,45 +296,25 @@ def _time_queries(spark, qs, sf_dir, *, passes, jit_passes=1, job_counts=None):
 
     ``job_counts`` (r16 verdict item 2, additions-only): when a dict is
     passed, each query of the FINAL pass runs under a job group and its
-    scheduled-job/task counts are recorded there via the status tracker
+    scheduled-job/task counts are recorded there (``profile.job_group``)
     — so a flat 8-vs-32-core ratio in the driver's scaling probe reads
     as "honors cores but fixed-per-job-overhead-bound" (~7.7 jobs/query
     at sf0.1) instead of "env ignored". The group is set BEFORE the
-    timer starts and counts are fetched AFTER the timer stops; the
-    timed region is unchanged."""
+    timer starts and counts are read AFTER the timer stops; the timed
+    region is unchanged."""
     import gc
 
-    sc = spark.sparkContext
-    tracker = sc.statusTracker() if job_counts is not None else None
     best: dict[str, float] = {}
     runs: dict[str, list[float]] = {}
     for p in range(jit_passes + passes):
-        final_pass = p == jit_passes + passes - 1
+        counted = job_counts is not None and p == jit_passes + passes - 1
         for name, fn in qs.items():
-            if tracker is not None:
-                group = f"bench:{name}:{p}"
-                sc.setJobGroup(group, name)
-            t0 = time.perf_counter()
-            try:
+            with job_group(spark, f"bench:{name}") if counted else nullcontext() as rec:
+                t0 = time.perf_counter()
                 fn(spark, sf_dir).count()
                 elapsed = round(time.perf_counter() - t0, 4)
-            finally:
-                if tracker is not None:
-                    # a raising query must not leave later work tagged
-                    # (pyspark 4.1's SparkContext has no clearJobGroup)
-                    sc._jsc.clearJobGroup()
-            if tracker is not None and final_pass:
-                job_ids = tracker.getJobIdsForGroup(group)
-                jobs, tasks = len(job_ids), 0
-                for jid in job_ids:
-                    info = tracker.getJobInfo(jid)
-                    if info is None:
-                        continue
-                    for sid in info.stageIds:
-                        sinfo = tracker.getStageInfo(sid)
-                        if sinfo is not None and sinfo.numCompletedTasks > 0:
-                            tasks += sinfo.numTasks
-                job_counts[name] = {"jobs": jobs, "tasks": tasks}
+            if counted:
+                job_counts[name] = {"jobs": len(rec.jobs), "tasks": rec.tasks}
             if p >= jit_passes:
                 best[name] = min(best.get(name, elapsed), elapsed)
                 runs.setdefault(name, []).append(elapsed)
@@ -344,6 +326,35 @@ def _time_queries(spark, qs, sf_dir, *, passes, jit_passes=1, job_counts=None):
     return best, runs
 
 
+#: Benign log storms of this harness, silenced so a ~2 kB capture of
+#: the stderr tail carries real warnings only:
+#: - "Failed to update accumulator … non-existent accumulator" (ERROR)
+#:   and "Attempted to access garbage collected accumulator" (WARN):
+#:   gc.collect() between timed queries frees localCheckpoint'd plans
+#:   while straggler tasks and heartbeats of the freed job still report
+#:   accumulator updates — an artifact of reusing checkpointed plans
+#:   across passes, not a failure;
+#: - streaming-query boilerplate (temp-checkpoint and AQE-disabled
+#:   notices, per-run MicroBatchExecution chatter), once per streaming
+#:   gate query per pass — the gates create temp checkpoints on purpose;
+#: - "Block rdd_N_M already exists on this machine; not re-registering",
+#:   a replication notice from re-running checkpointed plans.
+_BENIGN_LOGGERS = (
+    ("org.apache.spark.scheduler.DAGScheduler", "FATAL"),
+    ("org.apache.spark.scheduler.TaskSetManager", "FATAL"),
+    ("org.apache.spark.util.AccumulatorContext", "ERROR"),
+    ("org.apache.spark.sql.execution.streaming.runtime.ResolveWriteToStream", "ERROR"),
+    ("org.apache.spark.sql.execution.streaming.runtime.MicroBatchExecution", "ERROR"),
+    ("org.apache.spark.storage.BlockManager", "ERROR"),
+)
+
+
+def silence_benign_logs(spark) -> None:
+    log4j = spark.sparkContext._jvm.org.apache.logging.log4j
+    for logger, level in _BENIGN_LOGGERS:
+        log4j.core.config.Configurator.setLevel(logger, getattr(log4j.Level, level))
+
+
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     # Progress bars and JSON must not share stdout: the driver parses ONE
@@ -353,57 +364,7 @@ def main() -> None:
     spark = get_spark(
         "bench", extra_conf={"spark.ui.showConsoleProgress": "false"}
     )
-    # Silence the benign "Failed to update accumulator … non-existent
-    # accumulator" ERROR storms: when gc.collect() between queries frees
-    # a localCheckpoint'd plan, straggler tasks from the freed job still
-    # report accumulator updates the driver has already unregistered — a
-    # known artifact of reusing checkpointed plans across timed passes,
-    # not a failure. They filled the driver's 2 kB stderr-tail capture
-    # for two rounds, making a real failure indistinguishable from the
-    # noise; the summary JSON line must be the signal.
-    jvm = spark.sparkContext._jvm
-    jvm.org.apache.logging.log4j.core.config.Configurator.setLevel(
-        "org.apache.spark.scheduler.DAGScheduler",
-        jvm.org.apache.logging.log4j.Level.FATAL,
-    )
-    jvm.org.apache.logging.log4j.core.config.Configurator.setLevel(
-        "org.apache.spark.scheduler.TaskSetManager",
-        jvm.org.apache.logging.log4j.Level.FATAL,
-    )
-    # Same artifact class as the two above: gc.collect() between timed
-    # queries frees localCheckpoint(eager=False) blocks, and straggler
-    # heartbeats then WARN-storm "Attempted to access garbage collected
-    # accumulator" hundreds of times — drowning the stderr tail the
-    # driver captures. Benign by construction here; keep the tail as
-    # signal for the next REAL warning.
-    jvm.org.apache.logging.log4j.core.config.Configurator.setLevel(
-        "org.apache.spark.util.AccumulatorContext",
-        jvm.org.apache.logging.log4j.Level.ERROR,
-    )
-    # Streaming-query boilerplate (temp-checkpoint notice, AQE-disabled
-    # notice, per-run MicroBatchExecution chatter) WARN-storms once per
-    # streaming gate query per pass — it filled the driver's stderr
-    # tail in BENCH_r10 the same way the accumulator storms did in r7.
-    # Benign by construction (the gates create temp checkpoints on
-    # purpose); same silencing convention.
-    for logger in (
-        "org.apache.spark.sql.execution.streaming.runtime"
-        ".ResolveWriteToStream",
-        "org.apache.spark.sql.execution.streaming.runtime"
-        ".MicroBatchExecution",
-    ):
-        jvm.org.apache.logging.log4j.core.config.Configurator.setLevel(
-            logger, jvm.org.apache.logging.log4j.Level.ERROR
-        )
-    # "Block rdd_N_M already exists on this machine; not re-registering"
-    # — a benign replication notice from re-running localCheckpoint'd
-    # plans across timed passes (the block is cached from the prior
-    # pass). It was the single stray WARN left in the BENCH_r11 tail;
-    # same silencing convention, keep the tail 100% signal.
-    jvm.org.apache.logging.log4j.core.config.Configurator.setLevel(
-        "org.apache.spark.storage.BlockManager",
-        jvm.org.apache.logging.log4j.Level.ERROR,
-    )
+    silence_benign_logs(spark)
 
     qs = {k: v for k, v in entrymod.queries().items() if k in HEADLINE}
 

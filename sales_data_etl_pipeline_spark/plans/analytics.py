@@ -84,7 +84,8 @@ def average_ticket_by_product(vendas: DataFrame, produtos: DataFrame) -> DataFra
 
 
 def sales_by_category(vendas: DataFrame, produtos: DataFrame) -> DataFrame:
-    """A3 — sale count per product category, descending.
+    """A3 — sale count per product category, descending; ties in
+    category order, so the PDF table and chart are deterministic.
 
     Reference: ``save_data_pdf_report.py:142-166``.
     """
@@ -92,7 +93,7 @@ def sales_by_category(vendas: DataFrame, produtos: DataFrame) -> DataFrame:
         vendas.join(F.broadcast(produtos.select("id_produto", "categoria")), "id_produto")
         .groupBy("categoria")
         .agg(F.count("id_venda").alias("quantidade_vendas"))
-        .orderBy(F.desc("quantidade_vendas"))
+        .orderBy(F.desc("quantidade_vendas"), F.asc("categoria"))
     )
 
 

@@ -70,12 +70,7 @@ def get_spark(
         # does not reproduce, and v2 trades job-commit atomicity for it
         # (MAPREDUCE-7282-class partial/duplicate files on task-commit
         # failure; Hadoop reverted its default to v1 for this reason).
-        # Correctness-first default; large-job deployments on
-        # rename-capable filesystems can still opt into v2 via env.
-        .config(
-            "spark.hadoop.mapreduce.fileoutputcommitter.algorithm.version",
-            os.environ.get("SPARK_GRAFT_COMMITTER_ALGO", "1"),
-        )
+        .config("spark.hadoop.mapreduce.fileoutputcommitter.algorithm.version", "1")
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

@@ -9,6 +9,7 @@ non-matching name (O5 NULLS LAST).
 from __future__ import annotations
 
 import datetime as dt
+import re
 
 import pytest
 
@@ -77,6 +78,27 @@ def test_sales_by_category(star):
     got = {(r.categoria, r.quantidade_vendas) for r in rows}
     assert got == {("Roupas", 2), ("Livros", 3)}
     assert rows[0].categoria == "Livros"
+
+
+def test_sales_by_category_ties_in_category_order(spark):
+    """Tied counts list in ``categoria`` order. The sort keys are
+    asserted too: unordered ties can come out in name order by chance."""
+    produtos = spark.createDataFrame(
+        [(i, f"Produto {i}", 1.0, c) for i, c in enumerate(["Zeta", "Alfa", "Mu", "Top"], 1)],
+        PRODUTOS,
+    )
+    sold = [1, 1, 2, 2, 3, 3, 4, 4, 4]
+    vendas = spark.createDataFrame(
+        [(i, dt.date(2025, 1, 1), p, 1, 1, 1.0, 1.0) for i, p in enumerate(sold, 1)],
+        VENDAS,
+    )
+    df = analytics.sales_by_category(vendas, produtos)
+    got = [(r.categoria, r.quantidade_vendas) for r in df.collect()]
+    assert got == [("Top", 3), ("Alfa", 2), ("Mu", 2), ("Zeta", 2)]
+    sort = df._jdf.queryExecution().analyzed().toString().splitlines()[0]
+    assert re.sub(r"#\d+L?", "", sort) == (
+        "Sort [quantidade_vendas DESC NULLS LAST, categoria ASC NULLS FIRST], true"
+    )
 
 
 def test_top5_limit(star):

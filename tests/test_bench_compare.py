@@ -116,12 +116,15 @@ def test_load_queries_guard_extended_run_uses_min2(tmp_path, capsys):
 
 def test_time_queries_clears_job_group_after_a_raising_query(spark):
     """A query that raises mid-pass must not leave the session's later
-    jobs tagged with its ``bench:*`` job group."""
+    jobs tagged with its ``bench:*`` job group. Only the counted (last)
+    pass sets a group, so the query raises on that pass."""
     import bench
 
     def boom(spark, sf_dir):
         raise RuntimeError("query failed")
 
     with pytest.raises(RuntimeError, match="query failed"):
-        bench._time_queries(spark, {"boom": boom}, "", passes=1, job_counts={})
+        bench._time_queries(
+            spark, {"boom": boom}, "", passes=1, jit_passes=0, job_counts={}
+        )
     assert spark.sparkContext.getLocalProperty("spark.jobGroup.id") is None

@@ -13,6 +13,7 @@ from pyspark.sql import functions as F
 
 from sales_data_etl_pipeline_spark.operators import ckpt, cleaning
 from sales_data_etl_pipeline_spark.plans import pipeline
+from sales_data_etl_pipeline_spark.profile import job_group
 
 
 # --------------------------- operator units --------------------------------
@@ -353,22 +354,16 @@ def test_run_pipeline_schedules_at_most_seven_jobs(spark, dirty_csvs, tmp_path):
     """One job per cleaned table plus its sink (and the produtos
     broadcast into vendas): side aggregates joined back would schedule
     a job per aggregate."""
-    sc = spark.sparkContext
-    group = "test_run_pipeline_jobs"
-    sc.setJobGroup(group, group)
-    try:
-        with ckpt.scope():
-            pipeline.run_pipeline(
-                spark,
-                str(dirty_csvs / "produtos.csv"),
-                str(dirty_csvs / "vendas.csv"),
-                str(dirty_csvs / "empregados.csv"),
-                str(tmp_path / "out"),
-                fallback_date="2025-06-30",
-            )
-    finally:
-        sc._jsc.clearJobGroup()
-    jobs = sc.statusTracker().getJobIdsForGroup(group)
+    with job_group(spark, "test_run_pipeline_jobs") as rec, ckpt.scope():
+        pipeline.run_pipeline(
+            spark,
+            str(dirty_csvs / "produtos.csv"),
+            str(dirty_csvs / "vendas.csv"),
+            str(dirty_csvs / "empregados.csv"),
+            str(tmp_path / "out"),
+            fallback_date="2025-06-30",
+        )
+    jobs = rec.jobs
     assert len(jobs) <= 7, jobs
 
 

@@ -17,6 +17,7 @@ Every entry is also re-checked by the full local sweep committed as
 
 from __future__ import annotations
 
+import os
 import re
 
 import pyarrow.parquet as pq
@@ -149,7 +150,7 @@ def test_scale_flag_means_superlinear():
     # sublinear growth (amortization ending) is never a flag
     assert not is_superlinear(3.95, 1.0)
     # every currently recorded measurement must be unflagged
-    with open("/root/repo/SCALE_EXPERIMENT.json") as f:
+    with open(os.path.join(os.path.dirname(entrymod.__file__), "SCALE_EXPERIMENT.json")) as f:
         rec = json.load(f)
     refired = [
         n

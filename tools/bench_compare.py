@@ -16,7 +16,7 @@ Usage::
     python tools/bench_compare.py [--candidate PATH]
         [--baseline NAME=GITREV_OR_PATH ...] [--threshold 1.3]
 
-Defaults: candidate = /root/repo/BENCH_LOCAL.json, baselines =
+Defaults: candidate = this checkout's BENCH_LOCAL.json, baselines =
 r12=2e6ef8d, r13=11315bc (the driver round-close commits), 1.3×.
 """
 
@@ -24,9 +24,10 @@ from __future__ import annotations
 
 import argparse
 import json
+import os
 import subprocess
 
-REPO = "/root/repo"
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 DEFAULT_BASELINES = ["r12=2e6ef8d", "r13=11315bc"]
 
@@ -39,8 +40,6 @@ def load_queries(spec: str) -> tuple[float, dict[str, float]]:
     errors as a file, not as a git rev), and everything else goes to
     git — which accepts slashed revisions like ``origin/main`` that
     the old '/'-substring heuristic misread as filenames."""
-    import os
-
     if os.path.exists(spec) or spec.endswith(".json"):
         with open(spec) as f:
             doc = json.load(f)

@@ -12,10 +12,11 @@ Usage: python tools/explain_audit.py [sf_dir [name ...]]  (default: HEADLINE)
 
 from __future__ import annotations
 
+import os
 import re
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import __spark_entry__ as entrymod
 from bench import HEADLINE

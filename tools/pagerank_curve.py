@@ -14,10 +14,12 @@ Writes the curve into SCALE_EXPERIMENT.json under
 from __future__ import annotations
 
 import json
+import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 from sales_data_etl_pipeline_spark.operators import dedup
 from sales_data_etl_pipeline_spark.plans import llm_demo
@@ -65,10 +67,10 @@ def main() -> int:
         "n_pairs": n_pairs,
         "superlinear": bool(t30 > 1.5 * pred30),
     }
-    with open("/root/repo/SCALE_EXPERIMENT.json") as f:
+    with open(os.path.join(ROOT, "SCALE_EXPERIMENT.json")) as f:
         doc = json.load(f)
     doc["pagerank_iteration_curve"] = rec
-    with open("/root/repo/SCALE_EXPERIMENT.json", "w") as f:
+    with open(os.path.join(ROOT, "SCALE_EXPERIMENT.json"), "w") as f:
         json.dump(doc, f, indent=1)
     print(json.dumps(rec))
     return 0

@@ -15,8 +15,8 @@ Arms:
 
 Scales: 5k docs (gate), 100k docs (x20), 400k docs (x80).
 """
-import sys, time, gc
-sys.path.insert(0, "/root/repo")
+import os, sys, time, gc
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__)))))
 from sales_data_etl_pipeline_spark.session import get_spark
 from sales_data_etl_pipeline_spark.operators.dedup import (
     MINHASH_P, _shingle_expr, hash_id_expr)

@@ -14,7 +14,7 @@ import sys
 import tempfile
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__)))))
 import __spark_entry__ as entrymod
 from sales_data_etl_pipeline_spark.session import get_spark
 from sales_data_etl_pipeline_spark.streaming import events as st

@@ -11,9 +11,10 @@ runs the query warm and records
   overhead at the bench's tiny SF is ~linear in tasks; at 100 TB the
   same counts read as shuffle rounds),
 
-via the status tracker with one job group per query. Optionally dumps
-``explain("formatted")`` per query to a directory (``--plans-dir``) —
-the before/after evidence files for optimization rounds.
+read through ``profile.job_group``, one job group per pass. Optionally
+dumps ``explain("formatted")`` per query to a directory
+(``--plans-dir``) — the before/after evidence files for optimization
+rounds.
 
 Usage:
   python tools/profile_queries.py [--sf-dir D] [--passes N]
@@ -34,43 +35,27 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import __spark_entry__ as entrymod
 from bench import HEADLINE
+from sales_data_etl_pipeline_spark.profile import job_group
 from sales_data_etl_pipeline_spark.session import get_spark
 
 
 def profile(spark, name, fn, sf_dir, passes):
-    sc = spark.sparkContext
-    tracker = sc.statusTracker()
     fn(spark, sf_dir).count()  # warm (JIT + caches), untimed, ungrouped
     gc.collect()
-    best = None
-    jobs = stages = tasks = 0
-    for p in range(passes):
-        group = f"profile:{name}:{p}"
-        sc.setJobGroup(group, name)
-        t0 = time.perf_counter()
-        fn(spark, sf_dir).count()
-        elapsed = time.perf_counter() - t0
-        sc.setJobGroup(None, None)
+    best = rec = None
+    for _ in range(passes):
+        with job_group(spark, f"profile:{name}") as run:
+            t0 = time.perf_counter()
+            fn(spark, sf_dir).count()
+            elapsed = time.perf_counter() - t0
         if best is None or elapsed < best:
-            best = elapsed
-            job_ids = tracker.getJobIdsForGroup(group)
-            jobs = len(job_ids)
-            stages = tasks = 0
-            for jid in job_ids:
-                info = tracker.getJobInfo(jid)
-                if info is None:
-                    continue
-                for sid in info.stageIds:
-                    sinfo = tracker.getStageInfo(sid)
-                    if sinfo is not None and sinfo.numCompletedTasks > 0:
-                        stages += 1
-                        tasks += sinfo.numTasks
+            best, rec = elapsed, run
         gc.collect()
     return {
         "sec": round(best, 4),
-        "jobs": jobs,
-        "stages": stages,
-        "tasks": tasks,
+        "jobs": len(rec.jobs),
+        "stages": len(rec.stages),
+        "tasks": rec.tasks,
     }
 
 

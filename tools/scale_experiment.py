@@ -24,7 +24,8 @@ import shutil
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 from pyspark.sql import functions as F
 
@@ -286,7 +287,7 @@ def soak() -> None:
             )
     finally:
         shutil.rmtree(SOAK_DST, ignore_errors=True)
-    path = "/root/repo/SCALE_EXPERIMENT.json"
+    path = os.path.join(ROOT, "SCALE_EXPERIMENT.json")
     with open(path) as f:
         rec_all = json.load(f)
     soak_doc = rec_all.setdefault("soak100", {})
@@ -353,7 +354,7 @@ def main() -> None:
             print(json.dumps({name: t}), flush=True)
     finally:
         shutil.rmtree(DST, ignore_errors=True)
-    path = "/root/repo/SCALE_EXPERIMENT.json"
+    path = os.path.join(ROOT, "SCALE_EXPERIMENT.json")
     try:
         with open(path) as f:
             doc = json.load(f)

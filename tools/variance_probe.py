@@ -9,8 +9,8 @@ on the machine), and every pass records
 
 - wall time (same ``.count()`` action as bench.py),
 - the JVM GC-time delta across the pass (JMX GarbageCollectorMXBeans),
-- per-stage executorRunTime / jvmGcTime / shuffle bytes for stages
-  submitted during the pass (Spark UI REST, enabled for this session),
+- per-stage executor run time / GC time / shuffle bytes of the stages
+  the pass ran (``profile.job_group``; the Spark UI stays disabled),
 
 so a straggler pass shows WHERE the time went: a GC spike with flat
 executorRunTime is heap/machine contention; a stage whose
@@ -30,13 +30,14 @@ from __future__ import annotations
 import argparse
 import gc
 import json
+import os
 import sys
 import time
-import urllib.request
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import __spark_entry__ as entrymod
+from sales_data_etl_pipeline_spark.profile import job_group
 from sales_data_etl_pipeline_spark.session import get_spark
 
 
@@ -48,38 +49,6 @@ def gc_millis(spark) -> int:
     return sum(beans.get(i).getCollectionTime() for i in range(beans.size()))
 
 
-def stages_since(spark, t0_ms: float) -> list[dict]:
-    app_id = spark.sparkContext.applicationId
-    url = f"http://localhost:4040/api/v1/applications/{app_id}/stages?status=COMPLETE"
-    try:
-        with urllib.request.urlopen(url, timeout=10) as r:
-            stages = json.load(r)
-    except Exception as e:  # UI not up (shouldn't happen) — degrade gracefully
-        return [{"error": str(e)}]
-    out = []
-    for s in stages:
-        sub = s.get("submissionTime")
-        if not sub:
-            continue
-        # "2026-08-15T23:20:29.123GMT" -> epoch ms
-        ts = time.mktime(time.strptime(sub[:19], "%Y-%m-%dT%H:%M:%S")) * 1000
-        if ts < t0_ms - 1000:
-            continue
-        out.append(
-            {
-                "stage": s["stageId"],
-                "name": s["name"].split("\n")[0][:60],
-                "tasks": s.get("numCompleteTasks"),
-                "executorRunTime_ms": s.get("executorRunTime"),
-                "jvmGcTime_ms": s.get("jvmGcTime"),
-                "shuffleReadBytes": s.get("shuffleReadBytes"),
-                "shuffleWriteBytes": s.get("shuffleWriteBytes"),
-            }
-        )
-    out.sort(key=lambda d: -(d.get("executorRunTime_ms") or 0))
-    return out
-
-
 def main() -> int:
     ap = argparse.ArgumentParser()
     ap.add_argument("queries", nargs="+")
@@ -89,11 +58,7 @@ def main() -> int:
     args = ap.parse_args()
 
     spark = get_spark(
-        "variance_probe",
-        extra_conf={
-            "spark.ui.enabled": "true",
-            "spark.ui.showConsoleProgress": "false",
-        },
+        "variance_probe", extra_conf={"spark.ui.showConsoleProgress": "false"}
     )
     qs = entrymod.queries()
     report: dict[str, dict] = {}
@@ -103,16 +68,18 @@ def main() -> int:
         gc.collect()
         passes = []
         for _ in range(args.passes):
-            g0 = gc_millis(spark)
-            t0 = time.time()
-            fn(spark, args.sf_dir).count()
-            wall = round(time.time() - t0, 3)
-            g1 = gc_millis(spark)
+            with job_group(spark, f"variance:{name}") as rec:
+                g0 = gc_millis(spark)
+                t0 = time.time()
+                fn(spark, args.sf_dir).count()
+                wall = round(time.time() - t0, 3)
+                g1 = gc_millis(spark)
+            stages = sorted(rec.stages, key=lambda s: -s["run_ms"])
             passes.append(
                 {
                     "wall_s": wall,
                     "gc_delta_ms": g1 - g0,
-                    "stages": stages_since(spark, t0 * 1000)[: args.top_stages],
+                    "stages": stages[: args.top_stages],
                 }
             )
             gc.collect()

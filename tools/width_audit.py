@@ -10,10 +10,11 @@ in total-bytes metrics; it only shows up as a stage with ``tasks ≈ 1``
 and a large ``executorRunTime``.
 
 This audit runs every query once (after one untimed warmup pass of the
-first query to absorb session fixed cost), reads the completed-stage
-metrics off the Spark UI REST API, and flags stages where
+first query to absorb session fixed cost), reads the metrics of the
+stages that run ran (``profile.job_group``; the Spark UI stays
+disabled), and flags stages where
 
-    tasks <= flag_tasks  AND  executorRunTime_ms >= flag_run_ms
+    tasks <= flag_tasks  AND  run_ms >= flag_run_ms
 
 The r12 example this tool generalizes: ``similarity_knn_graph`` spent
 1.9 s of a 3.0 s wall in a 1-task verify stage; pinning the stage's
@@ -35,48 +36,16 @@ flagged, else 0 — suitable as a round-close gate next to explain_audit.
 from __future__ import annotations
 
 import argparse
-import calendar
 import json
+import os
 import sys
-import time
-import urllib.request
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import __spark_entry__ as entrymod
+from bench import HEADLINE, silence_benign_logs
+from sales_data_etl_pipeline_spark.profile import job_group
 from sales_data_etl_pipeline_spark.session import get_spark
-
-
-def stages_since(spark, t0_ms: float) -> list[dict]:
-    app_id = spark.sparkContext.applicationId
-    url = (
-        f"http://localhost:4040/api/v1/applications/{app_id}"
-        "/stages?status=COMPLETE"
-    )
-    with urllib.request.urlopen(url, timeout=10) as r:
-        stages = json.load(r)
-    out = []
-    for s in stages:
-        sub = s.get("submissionTime")
-        if not sub:
-            continue
-        # submissionTime is GMT ("...T10:11:12.000GMT") — timegm, not
-        # mktime: mktime reads the struct as LOCAL time, which on a
-        # non-UTC host shifts every stage by the UTC offset and makes
-        # the ts<t0 filter misattribute stages across queries
-        ts = calendar.timegm(time.strptime(sub[:19], "%Y-%m-%dT%H:%M:%S")) * 1000
-        if ts < t0_ms - 1000:
-            continue
-        out.append(
-            {
-                "stage": s["stageId"],
-                "tasks": s.get("numCompleteTasks") or 0,
-                "executorRunTime_ms": s.get("executorRunTime") or 0,
-                "shuffleReadBytes": s.get("shuffleReadBytes") or 0,
-                "inputBytes": s.get("inputBytes") or 0,
-            }
-        )
-    return out
 
 
 def main() -> int:
@@ -88,26 +57,10 @@ def main() -> int:
     args = ap.parse_args()
 
     spark = get_spark(
-        "width_audit",
-        extra_conf={
-            "spark.ui.enabled": "true",
-            "spark.ui.showConsoleProgress": "false",
-        },
+        "width_audit", extra_conf={"spark.ui.showConsoleProgress": "false"}
     )
-    # same benign-storm silencing bench.py applies (straggler tasks of
-    # freed localCheckpoint'd jobs reporting to unregistered
-    # accumulators ERROR-storm DAGScheduler) — keep this tool's output
-    # readable: the flag lines and the summary JSON are the signal
-    jvm = spark.sparkContext._jvm
-    for logger, level in (
-        ("org.apache.spark.scheduler.DAGScheduler", "FATAL"),
-        ("org.apache.spark.scheduler.TaskSetManager", "FATAL"),
-        ("org.apache.spark.util.AccumulatorContext", "ERROR"),
-    ):
-        jvm.org.apache.logging.log4j.core.config.Configurator.setLevel(
-            logger, getattr(jvm.org.apache.logging.log4j.Level, level)
-        )
-    from bench import HEADLINE
+    # the flag lines and the summary JSON are the signal
+    silence_benign_logs(spark)
 
     # Adjudicated narrow stages: flags measured and PROVEN optimal
     # report as notes (NOTE lines), not failures — scoped by a
@@ -151,21 +104,21 @@ def main() -> int:
         # inflates small stages past the flag threshold (the r13 false
         # flags); the audit profiles the warm second run
         qs[name](spark, args.sf_dir).count()
-        t0 = time.time()
-        qs[name](spark, args.sf_dir).count()
+        with job_group(spark, f"width:{name}") as rec:
+            qs[name](spark, args.sf_dir).count()
         hits = [
             s
-            for s in stages_since(spark, t0 * 1000)
-            # scan stages (inputBytes > 0, no shuffle read) are governed
+            for s in rec.stages
+            # scan stages (input bytes, no shuffle read) are governed
             # by fan_out / split sizing, not AQE coalescing — skip them
             if s["tasks"] <= args.flag_tasks
-            and s["executorRunTime_ms"] >= args.flag_run_ms
-            and not (s["inputBytes"] > 0 and s["shuffleReadBytes"] == 0)
+            and s["run_ms"] >= args.flag_run_ms
+            and not (s["input_bytes"] > 0 and s["shuffle_read_bytes"] == 0)
         ]
         ceiling = adjudicated.get(name)
         if ceiling is not None:
-            noted = [s for s in hits if s["shuffleReadBytes"] < ceiling]
-            hits = [s for s in hits if s["shuffleReadBytes"] >= ceiling]
+            noted = [s for s in hits if s["shuffle_read_bytes"] < ceiling]
+            hits = [s for s in hits if s["shuffle_read_bytes"] >= ceiling]
             for s in noted:
                 print(
                     f"NOTE {name}: narrow stage adjudicated optimal "
@@ -174,9 +127,7 @@ def main() -> int:
                     flush=True,
                 )
         if hits:
-            flagged[name] = sorted(
-                hits, key=lambda s: -s["executorRunTime_ms"]
-            )
+            flagged[name] = sorted(hits, key=lambda s: -s["run_ms"])
             print(f"FLAG {name}: {hits}", file=sys.stderr, flush=True)
     print(json.dumps(flagged, indent=1))
     return 1 if flagged else 0
