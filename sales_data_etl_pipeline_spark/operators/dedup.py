@@ -24,6 +24,8 @@ Scale shapes:
 
 from __future__ import annotations
 
+from collections.abc import Callable
+
 from pyspark.sql import Column, DataFrame, Observation, Window
 from pyspark.sql import functions as F
 
@@ -178,15 +180,182 @@ def shingle_sets(df: DataFrame, text_col: str = "text", n: int = 3) -> DataFrame
     )
 
 
-def ngram_jaccard_pairs(
-    df: DataFrame, *, n: int = 3, threshold: float = 0.6, text_col: str = "text"
-) -> DataFrame:
-    """Exact n-gram Jaccard near-dup pairs (a < b, jaccard ≥ threshold).
+def _shingle_ids(sh: DataFrame, keys: tuple[str, ...] = ("doc_id",)) -> DataFrame:
+    """(*keys, sh, sid): md5-derived shingle id in [0, MINHASH_P).
 
-    Candidates = pairs sharing ≥1 shingle; |A∩B| from the join, sizes
-    from per-doc counts, jaccard = inter / (|A|+|B|−inter).
+    A pure projection — no dictionary, no sort, no shuffle. Identical
+    ids in DuckDB (:func:`hash_id_sql`), so oracles stay bit-exact.
     """
-    sh = shingle_sets(df, text_col, n)
+    return sh.select(*keys, "sh", F.expr(hash_id_expr("sh", MINHASH_P)).alias("sid"))
+
+
+def _mixer(k: int, sid: str) -> str:
+    """Spark SQL for the k-th MinHash mixer over the bigint ``sid``:
+    h_k(sid) = ((2k+1)·sid + (3k+7)) mod P — the one definition the
+    batch aggregate and the streaming row-wise kernel share."""
+    return f"pmod(({2 * k + 1}) * {sid} + ({3 * k + 7}), {MINHASH_P})"
+
+
+def _minhash_per_doc(
+    ids: DataFrame,
+    num_hashes: int,
+    keys: tuple[str, ...] = ("doc_id",),
+    verify: str = "join",
+) -> DataFrame:
+    """(*keys, sid) rows → one row per doc: _mh0.._mh{K-1} and the
+    distinct-shingle count ``sz`` in ONE groupBy — no (doc, k) explode:
+    the shuffle carries |docs| rows of K longs instead of |shingles|·K
+    rows. ``verify="sets"`` also carries the shingle list ``_shset``
+    for :func:`_intersect`."""
+    if verify not in ("sets", "join"):
+        raise ValueError(f"verify must be 'sets' or 'join', got {verify!r}")
+    aggs = [
+        F.min(F.expr(_mixer(k, "sid"))).alias(f"_mh{k}") for k in range(num_hashes)
+    ]
+    aggs.append(F.count(F.lit(1)).alias("sz"))
+    if verify == "sets":
+        aggs.append(F.collect_list("sh").alias("_shset"))
+    return ids.groupBy(*keys).agg(*aggs)
+
+
+def _lsh_bands(
+    num_hashes: int,
+    bands: int,
+    mh: Callable[[int], Column] = lambda k: F.col(f"_mh{k}"),
+) -> Column:
+    """A doc's LSH bucket keys as ``explode(array(struct(band, sig)))``:
+    the K min-hashes ``mh(k)`` split into ``bands`` contiguous bands of
+    K/bands rows, a band's signature its rows comma-joined. Docs
+    agreeing on ALL rows of any band become candidates; with K=16, b=4
+    the candidate probability is 1-(1-j^4)^4 — steep around j≈0.5.
+
+    Built before any job runs, so a bad split raises up front: a band
+    of zero rows would give every doc the signature '' (all pairs
+    become candidates), and a remainder would silently drop hashes.
+    """
+    if bands < 1 or num_hashes < bands or num_hashes % bands:
+        raise ValueError(
+            f"bands must be >= 1 and divide num_hashes={num_hashes}, got {bands}"
+        )
+    rows = num_hashes // bands
+    return F.explode(
+        F.array(
+            *[
+                F.struct(
+                    F.lit(b).alias("band"),
+                    F.concat_ws(
+                        ",", *[mh(b * rows + r) for r in range(rows)]
+                    ).alias("sig"),
+                )
+                for b in range(bands)
+            ]
+        )
+    )
+
+
+def _band_signatures(
+    df: DataFrame, lsh_bands: Column, keep: tuple[str, ...] = ("doc_id",)
+) -> DataFrame:
+    """(*keep, band, sig) rows of :func:`_lsh_bands` — one banding for
+    every batch and streaming operator, so bucket keys are
+    byte-identical across them."""
+    return df.select(*keep, lsh_bands.alias("bs")).select(
+        *keep, F.col("bs.band").alias("band"), F.col("bs.sig").alias("sig")
+    )
+
+
+def _self_candidates(band_sig: DataFrame) -> DataFrame:
+    """Distinct (id_a < id_b) pairs sharing a (band, sig) bucket."""
+    a, b = band_sig.alias("a"), band_sig.alias("b")
+    return (
+        a.join(
+            b,
+            (F.col("a.band") == F.col("b.band")) & (F.col("a.sig") == F.col("b.sig")),
+        )
+        .filter(F.col("a.doc_id") < F.col("b.doc_id"))
+        .select(F.col("a.doc_id").alias("id_a"), F.col("b.doc_id").alias("id_b"))
+        .distinct()
+    )
+
+
+def _cross_candidates(base_bs: DataFrame, inc_bs: DataFrame) -> DataFrame:
+    """Distinct (base_id, doc_id) pairs sharing a bucket: strictly
+    base-bands ⋈ incoming-bands, so incoming never self-joins and base
+    never re-pairs with itself — per-batch cost is O(|incoming| +
+    matched candidates) regardless of corpus size."""
+    return (
+        base_bs.select(F.col("doc_id").alias("base_id"), "band", "sig")
+        .join(inc_bs, ["band", "sig"])
+        .select("base_id", "doc_id")
+        .distinct()
+    )
+
+
+def _keyed(df: DataFrame, key: str, **cols: str) -> DataFrame:
+    """``df`` re-keyed for one side of a pair join: doc_id as ``key``,
+    each column ``cols[name]`` renamed to ``name``. doc_id is not
+    aliased to itself: the optimizer keeps such an alias in some plans."""
+    doc = F.col("doc_id")
+    return df.select(
+        doc if key == "doc_id" else doc.alias(key),
+        *[F.col(c).alias(name) for name, c in cols.items()],
+    )
+
+
+def _with_sizes(
+    pairs: DataFrame, a: str, sizes_a: DataFrame, b: str, sizes_b: DataFrame
+) -> DataFrame:
+    """Attach each side's shingle count (``sz`` → sz_a, sz_b).
+
+    NO broadcast hint: the sizes tables hold one row PER DOCUMENT — AQE
+    broadcasts them while small, but at the 10⁹-doc design point a
+    forced broadcast of a multi-GB table fails outright, while the
+    un-hinted plan degrades gracefully to a shuffle join on the id key.
+    """
+    return pairs.join(_keyed(sizes_a, a, sz_a="sz"), a).join(
+        _keyed(sizes_b, b, sz_b="sz"), b
+    )
+
+
+def _intersect(
+    candidates: DataFrame,
+    verify: str,
+    side_a: tuple[str, DataFrame, DataFrame],
+    side_b: tuple[str, DataFrame, DataFrame],
+) -> DataFrame:
+    """Exact |A∩B| of candidate pairs: (key_a, key_b, sz_a, sz_b,
+    inter). Each side is (key, per-doc table, shingle table). Both
+    modes give identical output:
+
+    - ``"sets"`` — ``array_intersect`` on the shingle lists the per-doc
+      aggregate carried (:func:`_minhash_per_doc`). No second shuffle
+      of the shingle table, but row width is O(doc shingle count):
+      right when documents are bounded.
+    - ``"join"`` — no ``collect_list`` anywhere; only the candidate
+      docs' shingles are joined back and counted. Bounded row width
+      regardless of document size — the 100 TB setting when single docs
+      can hold millions of shingles.
+    """
+    (a, pd_a, sh_a), (b, pd_b, sh_b) = side_a, side_b
+    if verify == "sets":
+        return (
+            candidates.join(_keyed(pd_a, a, sz_a="sz", _set_a="_shset"), a)
+            .join(_keyed(pd_b, b, sz_b="sz", _set_b="_shset"), b)
+            .withColumn("inter", F.size(F.array_intersect("_set_a", "_set_b")))
+        )
+    inter = (
+        candidates.join(_keyed(sh_a, a, _sh="sh"), a)
+        .join(_keyed(sh_b, b, _sh="sh"), [b, "_sh"])
+        .groupBy(a, b)
+        .agg(F.count(F.lit(1)).alias("inter"))
+    )
+    return _with_sizes(inter, a, pd_a, b, pd_b)
+
+
+def _exact_pairs(sh: DataFrame) -> DataFrame:
+    """(id_a < id_b, inter, sz_a, sz_b) for every pair sharing ≥1
+    shingle: |A∩B| from the shared-shingle self-join, sizes from
+    per-doc counts — quadratic in hot shingles."""
     sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("sz"))
     a, b = sh.alias("a"), sh.alias("b")
     inter = (
@@ -195,81 +364,72 @@ def ngram_jaccard_pairs(
         .groupBy(F.col("a.doc_id").alias("id_a"), F.col("b.doc_id").alias("id_b"))
         .agg(F.count(F.lit(1)).alias("inter"))
     )
-    sza = sizes.select(F.col("doc_id").alias("id_a"), F.col("sz").alias("sz_a"))
-    szb = sizes.select(F.col("doc_id").alias("id_b"), F.col("sz").alias("sz_b"))
-    # NO broadcast hint on the sizes joins: `sizes` is one row PER
-    # DOCUMENT — at sf0.1 AQE picks broadcast on its own (sub-threshold),
-    # but at the 10⁹-doc design point a forced broadcast of a multi-GB
-    # table fails outright, while the un-hinted plan degrades gracefully
-    # to a shuffle join on the shared id key.
-    return (
-        inter.join(sza, "id_a")
-        .join(szb, "id_b")
-        .withColumn(
+    return _with_sizes(inter, "id_a", sizes, "id_b", sizes)
+
+
+def _over(df: DataFrame, threshold: float, name: str) -> DataFrame:
+    """Keep rows whose raw ``_ratio`` ≥ threshold and emit it 6dp-rounded
+    as ``name`` — the oracle's convention: a raw ratio in [threshold −
+    5e-7, threshold) must NOT be admitted by rounding."""
+    return df.filter(F.col("_ratio") >= threshold).withColumn(
+        name, q6(F.col("_ratio"))
+    )
+
+
+def _jaccard(pairs: DataFrame, threshold: float) -> DataFrame:
+    """Thresholded ``jaccard`` = inter / (sz_a + sz_b − inter)."""
+    return _over(
+        pairs.withColumn(
             "_ratio",
             F.col("inter") / (F.col("sz_a") + F.col("sz_b") - F.col("inter")),
-        )
-        # threshold the RAW ratio (oracle convention); the 6dp rounding
-        # is presentation-only on the emitted column — a raw jaccard in
-        # [threshold - 5e-7, threshold) must NOT be admitted by rounding
-        .filter(F.col("_ratio") >= threshold)
-        .withColumn("jaccard", q6(F.col("_ratio")))
-        .select("id_a", "id_b", "jaccard")
+        ),
+        threshold,
+        "jaccard",
     )
 
 
-def _shingle_ids(sh: DataFrame) -> DataFrame:
-    """(doc_id, sid): md5-derived shingle id in [0, MINHASH_P).
+def _directed_containment(pairs: DataFrame, threshold: float) -> DataFrame:
+    """Both directed ratios of each (id_a, id_b, inter, sz_a, sz_b) row —
+    the intersection is symmetric, so it is counted once per unordered
+    pair — thresholded to (doc_id, host_id, containment)."""
 
-    A pure projection — no dictionary, no sort, no shuffle. Identical
-    ids in DuckDB (:func:`hash_id_sql`), so oracles stay bit-exact.
-    """
-    return sh.select("doc_id", F.expr(hash_id_expr("sh", MINHASH_P)).alias("sid"))
+    def hit(doc: str, host: str, sz: str) -> Column:
+        return F.struct(
+            F.col(doc).alias("doc_id"),
+            F.col(host).alias("host_id"),
+            (F.col("inter") / F.col(sz)).alias("_ratio"),
+        )
+
+    both = F.array(hit("id_a", "id_b", "sz_a"), hit("id_b", "id_a", "sz_b"))
+    directed = pairs.select(F.explode(both).alias("d")).select(
+        "d.doc_id", "d.host_id", "d._ratio"
+    )
+    return _over(directed, threshold, "containment").select(
+        "doc_id", "host_id", "containment"
+    )
 
 
-def _minhash_aggs(num_hashes: int) -> list[Column]:
-    """The K per-doc min-hash aggregates: h_k(sid) = ((2k+1)·sid +
-    (3k+7)) mod P over a column named ``sid`` — shared by every
-    MinHash operator so the mixer family is defined exactly once."""
-    return [
-        F.min(
-            F.expr(f"pmod(({2 * k + 1}) * sid + ({3 * k + 7}), {MINHASH_P})")
-        ).alias(f"_mh{k}")
-        for k in range(num_hashes)
-    ]
+def _best_per_doc(matches: DataFrame, score: str) -> DataFrame:
+    """Each incoming doc's best base match: highest rounded ``score``,
+    smallest base id on ties → (doc_id, base_id, score)."""
+    w = Window.partitionBy("doc_id").orderBy(F.desc(score), F.asc("base_id"))
+    return (
+        matches.withColumn("_rn", F.row_number().over(w))
+        .filter(F.col("_rn") == 1)
+        .select("doc_id", "base_id", score)
+    )
 
 
-def _band_signatures_df(
-    per_doc: DataFrame, num_hashes: int, bands: int
+def ngram_jaccard_pairs(
+    df: DataFrame, *, n: int = 3, threshold: float = 0.6, text_col: str = "text"
 ) -> DataFrame:
-    """Wide _mh0.._mh{K-1} columns → exploded (doc_id, band, sig) keys:
-    K hashes split into ``bands`` contiguous bands; a band's signature
-    is its rows comma-joined. Shared banding for pairs / incremental /
-    containment so bucket keys are byte-identical across operators."""
-    rows = num_hashes // bands
-    structs = [
-        F.struct(
-            F.lit(b).alias("band"),
-            F.concat_ws(
-                ",", *[F.col(f"_mh{b * rows + r}") for r in range(rows)]
-            ).alias("sig"),
-        )
-        for b in range(bands)
-    ]
-    return per_doc.select(
-        "doc_id", F.explode(F.array(*structs)).alias("bs")
-    ).select(
-        "doc_id", F.col("bs.band").alias("band"), F.col("bs.sig").alias("sig")
-    )
+    """Exact n-gram Jaccard near-dup pairs (a < b, jaccard ≥ threshold).
 
-
-def _minhash_wide(ids: DataFrame, num_hashes: int) -> DataFrame:
-    """(doc_id, sid) → one row per doc with columns _mh0.._mh{K-1}.
-
-    K min-aggregates in ONE groupBy — no (doc, k) explode: the shuffle
-    carries |docs| rows of K longs instead of |shingles|·K rows.
+    Candidates = pairs sharing ≥1 shingle; |A∩B| from the join, sizes
+    from per-doc counts, jaccard = inter / (|A|+|B|−inter).
     """
-    return ids.groupBy("doc_id").agg(*_minhash_aggs(num_hashes))
+    pairs = _exact_pairs(shingle_sets(df, text_col, n))
+    return _jaccard(pairs, threshold).select("id_a", "id_b", "jaccard")
 
 
 def minhash_lsh_pairs(
@@ -286,21 +446,10 @@ def minhash_lsh_pairs(
     """MinHash+LSH near-dup pairs: band → bucket-join candidates → exact
     Jaccard verification (a < b, jaccard ≥ threshold).
 
-    Banding: K hashes split into ``bands`` bands of K/bands rows; docs
-    agreeing on ALL rows of any band become candidates. With K=16, b=4,
-    r=4 the candidate probability is 1-(1-j^4)^4 — steep around j≈0.5.
-
-    ``verify`` picks the exact-Jaccard strategy (identical output):
-
-    - ``"sets"`` — carry each doc's shingle set through the per-doc
-      aggregate and ``array_intersect`` on candidate pairs. One shuffle
-      of the shingle table, but row width is O(doc shingle count):
-      right when documents are bounded (the default here).
-    - ``"join"`` — no ``collect_list`` anywhere; |A∩B| comes from
-      joining the candidate pairs back to the exploded shingle table
-      (the :func:`ngram_jaccard_pairs` counting form, but only over LSH
-      candidates). Bounded row width regardless of document size — the
-      100 TB setting when single docs can hold millions of shingles.
+    Banding (:func:`_lsh_bands`): K hashes split into ``bands`` bands of
+    K/bands rows; ``bands`` must divide ``num_hashes``. ``verify`` picks
+    the exact-|A∩B| strategy, ``"sets"`` or ``"join"`` (identical
+    output; :func:`_intersect`).
 
     ``max_shingle_df`` (stop-shingle cap, standard near-dup practice):
     drop shingles appearing in more than that FRACTION of documents
@@ -313,87 +462,24 @@ def minhash_lsh_pairs(
     broadcast anti-join: the corpus-side shingle table never shuffles
     for it. ``None`` (default) keeps the historical exact semantics.
     """
-    if verify not in ("sets", "join"):
-        raise ValueError(f"verify must be 'sets' or 'join', got {verify!r}")
+    lsh_bands = _lsh_bands(num_hashes, bands)
     # ONE groupBy(doc_id) computes everything per-doc downstream work
-    # needs: the K min-hashes, the distinct-shingle count, and the
-    # shingle set itself. The 2M-row exploded shingle table is shuffled
-    # exactly once; banding, the candidate self-join, and exact-Jaccard
-    # verification (array_intersect on the carried sets) all run on the
-    # |docs|-row result. The previous shape re-shuffled the full shingle
-    # table on (doc, shingle) for verification — the dominant exchange.
-    # The lazy localCheckpoint materializes the per-doc table once for
-    # its four consumers (band self-join ×2, verify ×2); at cluster
-    # scale this is a stage-boundary write to reliable storage.
+    # needs: the K min-hashes, the distinct-shingle count, and (sets)
+    # the shingle set itself. The exploded shingle table is shuffled
+    # once; banding, the candidate self-join, and verification all run
+    # on the |docs|-row result. The checkpoint materializes the per-doc
+    # table once for its four consumers (band self-join ×2, verify ×2).
     sh = shingle_sets(df, text_col, n)
     if max_shingle_df is not None:
         sh = _drop_hot_shingles(sh, max_shingle_df, site="minhash_lsh:shingle_df")
-    ids = sh.select(
-        "doc_id", "sh", F.expr(hash_id_expr("sh", MINHASH_P)).alias("sid")
+    per_doc = ckpt.checkpoint(
+        _minhash_per_doc(_shingle_ids(sh), num_hashes, verify=verify)
     )
-    per_doc_aggs = [*_minhash_aggs(num_hashes), F.count(F.lit(1)).alias("sz")]
-    if verify == "sets":
-        per_doc_aggs.append(F.collect_list("sh").alias("_shset"))
-    per_doc = ckpt.checkpoint(ids.groupBy("doc_id").agg(*per_doc_aggs))
-    band_sig = _band_signatures_df(per_doc, num_hashes, bands)
-    a, b = band_sig.alias("a"), band_sig.alias("b")
-    candidates = (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band")) & (F.col("a.sig") == F.col("b.sig")),
-        )
-        .filter(F.col("a.doc_id") < F.col("b.doc_id"))
-        .select(F.col("a.doc_id").alias("id_a"), F.col("b.doc_id").alias("id_b"))
-        .distinct()
+    candidates = _self_candidates(_band_signatures(per_doc, lsh_bands))
+    pairs = _intersect(
+        candidates, verify, ("id_a", per_doc, sh), ("id_b", per_doc, sh)
     )
-    if verify == "sets":
-        va = per_doc.select(
-            F.col("doc_id").alias("id_a"),
-            F.col("sz").alias("sz_a"),
-            F.col("_shset").alias("_set_a"),
-        )
-        vb = per_doc.select(
-            F.col("doc_id").alias("id_b"),
-            F.col("sz").alias("sz_b"),
-            F.col("_shset").alias("_set_b"),
-        )
-        verified = (
-            candidates.join(va, "id_a")
-            .join(vb, "id_b")
-            .withColumn("inter", F.size(F.array_intersect("_set_a", "_set_b")))
-        )
-    else:
-        # candidate-join counting: route only the candidate docs' shingles
-        # through the intersect join — row width stays O(1)
-        sh_a = sh.select(
-            F.col("doc_id").alias("id_a"), F.col("sh").alias("_sh")
-        )
-        sh_b = sh.select(
-            F.col("doc_id").alias("id_b"), F.col("sh").alias("_sh")
-        )
-        inter = (
-            candidates.join(sh_a, "id_a")
-            .join(sh_b, ["id_b", "_sh"])
-            .groupBy("id_a", "id_b")
-            .agg(F.count(F.lit(1)).alias("inter"))
-        )
-        sza = per_doc.select(
-            F.col("doc_id").alias("id_a"), F.col("sz").alias("sz_a")
-        )
-        szb = per_doc.select(
-            F.col("doc_id").alias("id_b"), F.col("sz").alias("sz_b")
-        )
-        verified = inter.join(sza, "id_a").join(szb, "id_b")
-    return (
-        verified.withColumn(
-            "_ratio",
-            F.col("inter") / (F.col("sz_a") + F.col("sz_b") - F.col("inter")),
-        )
-        # raw-ratio threshold, rounded emit — same contract as the oracle
-        .filter(F.col("_ratio") >= threshold)
-        .withColumn("jaccard", q6(F.col("_ratio")))
-        .select("id_a", "id_b", "jaccard")
-    )
+    return _jaccard(pairs, threshold).select("id_a", "id_b", "jaccard")
 
 
 def simhash_fingerprints(df: DataFrame, text_col: str = "text") -> DataFrame:
@@ -983,132 +1069,42 @@ def minhash_lsh_incremental(
     existing BASE corpus — the daily-ingest shape of a 100 TB pipeline.
 
     The candidate join is strictly base-bands ⋈ incoming-bands on
-    (band, signature): incoming never self-joins and base never
-    re-pairs with itself, so per-batch cost is O(|incoming| + matched
-    candidates) regardless of corpus size. At cluster scale the base
-    side's per-doc signature table is the artifact a previous run
-    persisted (bucketed by (band, sig)); recomputing it here keeps the
-    operator self-contained while the join shape stays identical.
-
-    ``verify`` mirrors :func:`minhash_lsh_pairs` exactly: ``"sets"``
-    carries each doc's shingle set through the per-doc aggregate
-    (bounded docs, one fewer shuffle of the shingle table); ``"join"``
-    computes |A∩B| by joining the candidate pairs back to the exploded
-    shingle tables — NO ``collect_list`` anywhere, so per-row memory is
-    O(1) regardless of document length. At 100 TB daily-ingest against
-    book-length documents, ``"join"`` is the right mode.
+    (band, signature) (:func:`_cross_candidates`). At cluster scale the
+    base side's per-doc signature table is the artifact a previous run
+    persisted (:func:`save_minhash_base`); recomputing it here keeps
+    the operator self-contained while the join shape stays identical.
+    ``verify`` is :func:`minhash_lsh_pairs`'s (:func:`_intersect`).
 
     Returns one row per matched incoming doc: (doc_id, base_id,
     jaccard) — its BEST base match (highest rounded jaccard, smallest
     base id on ties). Unmatched incoming docs are absent (the caller
     anti-joins to get the admit set).
     """
-    if verify not in ("sets", "join"):
-        raise ValueError(f"verify must be 'sets' or 'join', got {verify!r}")
+    lsh_bands = _lsh_bands(num_hashes, bands)
     sh_base = shingle_sets(base, text_col, n)
     sh_inc = shingle_sets(incoming, text_col, n)
-
-    def band_sig(pd: DataFrame) -> DataFrame:
-        return _band_signatures_df(pd, num_hashes, bands)
-
-    # ONE per-doc aggregation over base ∪ incoming (r17): both sides'
-    # shingle streams share a single groupBy exchange and a single
-    # eager checkpoint instead of one of each per side — same shuffled
-    # bytes, half the shuffle rounds/materialization jobs (guide §2.4).
-    # Grouping key includes the side tag: base and incoming are
-    # distinct corpora whose doc_ids may collide, so grouping by
-    # doc_id alone would merge unrelated documents.
-    aggs = [*_minhash_aggs(num_hashes), F.count(F.lit(1)).alias("sz")]
-    if verify == "sets":
-        aggs.append(F.collect_list("sh").alias("_shset"))
+    # ONE per-doc aggregation over base ∪ incoming: both sides' shingle
+    # streams share a single groupBy exchange and a single eager
+    # checkpoint. The grouping key includes the side tag: base and
+    # incoming are distinct corpora whose doc_ids may collide.
     tagged = sh_base.withColumn("_is_base", F.lit(True)).unionByName(
         sh_inc.withColumn("_is_base", F.lit(False))
     )
+    keys = ("doc_id", "_is_base")
     pd_all = ckpt.checkpoint(
-        tagged.select(
-            "doc_id",
-            "_is_base",
-            "sh",
-            F.expr(hash_id_expr("sh", MINHASH_P)).alias("sid"),
-        )
-        .groupBy("doc_id", "_is_base")
-        .agg(*aggs)
+        _minhash_per_doc(_shingle_ids(tagged, keys), num_hashes, keys, verify)
         # EAGER: consumed by both band builds and both verify sides —
         # concurrent stages of one action (the r16 ABBA rule)
     )
     base_pd = pd_all.filter(F.col("_is_base")).drop("_is_base")
     inc_pd = pd_all.filter(~F.col("_is_base")).drop("_is_base")
-    candidates = (
-        band_sig(base_pd)
-        .select(
-            F.col("doc_id").alias("base_id"), "band", "sig"
-        )
-        .join(
-            band_sig(inc_pd).select(
-                F.col("doc_id").alias("doc_id"), "band", "sig"
-            ),
-            ["band", "sig"],
-        )
-        .select("base_id", "doc_id")
-        .distinct()
+    candidates = _cross_candidates(
+        _band_signatures(base_pd, lsh_bands), _band_signatures(inc_pd, lsh_bands)
     )
-    if verify == "sets":
-        va = base_pd.select(
-            F.col("doc_id").alias("base_id"),
-            F.col("sz").alias("sz_a"),
-            F.col("_shset").alias("_set_a"),
-        )
-        vb = inc_pd.select(
-            "doc_id", F.col("sz").alias("sz_b"), F.col("_shset").alias("_set_b")
-        )
-        verified = (
-            candidates.join(va, "base_id")
-            .join(vb, "doc_id")
-            .withColumn(
-                "inter", F.size(F.array_intersect("_set_a", "_set_b"))
-            )
-        )
-    else:
-        # candidate-join counting (the minhash_lsh_pairs verify='join'
-        # form): only candidate docs' shingles flow through the
-        # intersect join, rows stay O(1)-wide
-        inter = (
-            candidates.join(
-                sh_base.select(
-                    F.col("doc_id").alias("base_id"), F.col("sh").alias("_sh")
-                ),
-                "base_id",
-            )
-            .join(
-                sh_inc.select("doc_id", F.col("sh").alias("_sh")),
-                ["doc_id", "_sh"],
-            )
-            .groupBy("base_id", "doc_id")
-            .agg(F.count(F.lit(1)).alias("inter"))
-        )
-        verified = inter.join(
-            base_pd.select(
-                F.col("doc_id").alias("base_id"), F.col("sz").alias("sz_a")
-            ),
-            "base_id",
-        ).join(inc_pd.select("doc_id", F.col("sz").alias("sz_b")), "doc_id")
-    verified = (
-        verified.withColumn(
-            "_ratio",
-            F.col("inter") / (F.col("sz_a") + F.col("sz_b") - F.col("inter")),
-        )
-        # raw-ratio threshold (oracle convention); rounded emit/rank
-        .filter(F.col("_ratio") >= threshold)
-        .withColumn("jaccard", q6(F.col("_ratio")))
+    pairs = _intersect(
+        candidates, verify, ("base_id", base_pd, sh_base), ("doc_id", inc_pd, sh_inc)
     )
-    w = Window.partitionBy("doc_id").orderBy(
-        F.desc("jaccard"), F.asc("base_id")
-    )
-    return (
-        verified.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") == 1)
-        .select("doc_id", "base_id", "jaccard")
-    )
+    return _best_per_doc(_jaccard(pairs, threshold), "jaccard")
 
 
 def save_minhash_base(
@@ -1145,22 +1141,16 @@ def save_minhash_base(
     """
     from sales_data_etl_pipeline_spark.sources.parquet import overwrite_table
 
-    sh = shingle_sets(base, text_col, n)
-    ids = sh.select(
-        "doc_id", "sh", F.expr(hash_id_expr("sh", MINHASH_P)).alias("sid")
-    )
+    lsh_bands = _lsh_bands(num_hashes, bands)
     overwrite_table(
-        ids, f"{table_prefix}_shingles", bucket_by=(buckets, "doc_id")
+        _shingle_ids(shingle_sets(base, text_col, n)),
+        f"{table_prefix}_shingles",
+        bucket_by=(buckets, "doc_id"),
     )
     spark = base.sparkSession
-    stored = spark.table(f"{table_prefix}_shingles")
-    per_doc = stored.groupBy("doc_id").agg(
-        *_minhash_aggs(num_hashes), F.count(F.lit(1)).alias("sz")
-    )
+    per_doc = _minhash_per_doc(spark.table(f"{table_prefix}_shingles"), num_hashes)
     overwrite_table(per_doc, f"{table_prefix}_per_doc")
-    band_sig = _band_signatures_df(
-        spark.table(f"{table_prefix}_per_doc"), num_hashes, bands
-    )
+    band_sig = _band_signatures(spark.table(f"{table_prefix}_per_doc"), lsh_bands)
     overwrite_table(
         band_sig, f"{table_prefix}_band_sig", bucket_by=(buckets, "sig")
     )
@@ -1186,71 +1176,24 @@ def minhash_lsh_incremental_prepared(
     whole base every call — measured 3.6× the carried-sets mode at the
     ~sf10 soak; this path removes that recompute entirely).
 
-    Verification is the bounded-memory candidate-join counting form
-    (``verify='join'``): no ``collect_list``, O(1)-wide rows, and the
-    base shingle table arrives bucketed by doc_id so the intersect
-    join never shuffles it. Output contract is identical to
-    :func:`minhash_lsh_incremental`: (doc_id, base_id, jaccard), best
-    base match per incoming doc.
+    Verification is the bounded-memory ``verify='join'`` form
+    (:func:`_intersect`), and the base shingle table arrives bucketed
+    by doc_id so the intersect join never shuffles it. Output contract
+    is identical to :func:`minhash_lsh_incremental`: (doc_id, base_id,
+    jaccard), best base match per incoming doc.
     """
+    lsh_bands = _lsh_bands(num_hashes, bands)
     base_pd = spark.table(f"{table_prefix}_per_doc")
-    base_bs = spark.table(f"{table_prefix}_band_sig")
     sh_base = spark.table(f"{table_prefix}_shingles")
-
     sh_inc = shingle_sets(incoming, text_col, n)
-    ids_inc = sh_inc.select(
-        "doc_id", "sh", F.expr(hash_id_expr("sh", MINHASH_P)).alias("sid")
+    inc_pd = ckpt.checkpoint(_minhash_per_doc(_shingle_ids(sh_inc), num_hashes))
+    candidates = _cross_candidates(
+        spark.table(f"{table_prefix}_band_sig"), _band_signatures(inc_pd, lsh_bands)
     )
-    inc_pd = ckpt.checkpoint(
-        ids_inc.groupBy("doc_id")
-        .agg(*_minhash_aggs(num_hashes), F.count(F.lit(1)).alias("sz"))
+    pairs = _intersect(
+        candidates, "join", ("base_id", base_pd, sh_base), ("doc_id", inc_pd, sh_inc)
     )
-    candidates = (
-        base_bs.select(F.col("doc_id").alias("base_id"), "band", "sig")
-        .join(
-            _band_signatures_df(inc_pd, num_hashes, bands),
-            ["band", "sig"],
-        )
-        .select("base_id", "doc_id")
-        .distinct()
-    )
-    inter = (
-        candidates.join(
-            sh_base.select(
-                F.col("doc_id").alias("base_id"), F.col("sh").alias("_sh")
-            ),
-            "base_id",
-        )
-        .join(
-            sh_inc.select("doc_id", F.col("sh").alias("_sh")),
-            ["doc_id", "_sh"],
-        )
-        .groupBy("base_id", "doc_id")
-        .agg(F.count(F.lit(1)).alias("inter"))
-    )
-    verified = (
-        inter.join(
-            base_pd.select(
-                F.col("doc_id").alias("base_id"), F.col("sz").alias("sz_a")
-            ),
-            "base_id",
-        )
-        .join(inc_pd.select("doc_id", F.col("sz").alias("sz_b")), "doc_id")
-        .withColumn(
-            "_ratio",
-            F.col("inter") / (F.col("sz_a") + F.col("sz_b") - F.col("inter")),
-        )
-        .filter(F.col("_ratio") >= threshold)
-        .withColumn("jaccard", q6(F.col("_ratio")))
-    )
-    w = Window.partitionBy("doc_id").orderBy(
-        F.desc("jaccard"), F.asc("base_id")
-    )
-    return (
-        verified.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") == 1)
-        .select("doc_id", "base_id", "jaccard")
-    )
+    return _best_per_doc(_jaccard(pairs, threshold), "jaccard")
 
 
 def _drop_hot_shingles(
@@ -1305,13 +1248,11 @@ def containment_pairs(
 
     Plan shape: identical to :func:`ngram_jaccard_pairs` — shared-
     shingle equi-join candidates, ONE intersection count per unordered
-    pair, then both directed ratios derived from that single row (the
-    intersection is symmetric; computing it twice would double the
-    dominant join). Raw-ratio threshold, rounded emit (module
-    convention). Candidate volume is bounded by shared shingles;
-    ``max_shingle_df`` (:func:`_drop_hot_shingles`) caps the hot-
-    shingle tail exactly as in MinHash, and for unbounded corpora
-    :func:`minhash_containment_pairs` is the banded drop-in.
+    pair, then both directed ratios derived from that single row
+    (:func:`_directed_containment`). Candidate volume is bounded by
+    shared shingles; ``max_shingle_df`` (:func:`_drop_hot_shingles`)
+    caps the hot-shingle tail exactly as in MinHash, and for unbounded
+    corpora :func:`minhash_containment_pairs` is the banded drop-in.
     """
     # materialize the exploded shingle table once for its three
     # consumers (self-join build+probe sides, per-doc sizes): the
@@ -1321,42 +1262,7 @@ def containment_pairs(
     sh = shingle_sets(df, text_col, n)
     if max_shingle_df is not None:
         sh = _drop_hot_shingles(sh, max_shingle_df, site="containment:shingle_df")
-    sh = ckpt.checkpoint(sh)
-    sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("sz"))
-    a, b = sh.alias("a"), sh.alias("b")
-    inter = (
-        a.join(b, F.col("a.sh") == F.col("b.sh"))
-        .filter(F.col("a.doc_id") < F.col("b.doc_id"))
-        .groupBy(F.col("a.doc_id").alias("id_a"), F.col("b.doc_id").alias("id_b"))
-        .agg(F.count(F.lit(1)).alias("inter"))
-    )
-    sza = sizes.select(F.col("doc_id").alias("id_a"), F.col("sz").alias("sz_a"))
-    szb = sizes.select(F.col("doc_id").alias("id_b"), F.col("sz").alias("sz_b"))
-    # un-hinted sizes joins (one row per doc): AQE broadcasts while the
-    # table is small and falls back to a shuffle join at 10⁹ docs —
-    # a forced broadcast would fail outright there (VERDICT r7 §wrong-1)
-    both = inter.join(sza, "id_a").join(szb, "id_b")
-    directed = both.select(
-        F.explode(
-            F.array(
-                F.struct(
-                    F.col("id_a").alias("doc_id"),
-                    F.col("id_b").alias("host_id"),
-                    (F.col("inter") / F.col("sz_a")).alias("_ratio"),
-                ),
-                F.struct(
-                    F.col("id_b").alias("doc_id"),
-                    F.col("id_a").alias("host_id"),
-                    (F.col("inter") / F.col("sz_b")).alias("_ratio"),
-                ),
-            )
-        ).alias("d")
-    ).select("d.doc_id", "d.host_id", "d._ratio")
-    return (
-        directed.filter(F.col("_ratio") >= threshold)
-        .withColumn("containment", q6(F.col("_ratio")))
-        .select("doc_id", "host_id", "containment")
-    )
+    return _directed_containment(_exact_pairs(ckpt.checkpoint(sh)), threshold)
 
 
 def minhash_containment_pairs(
@@ -1382,69 +1288,22 @@ def minhash_containment_pairs(
     banding S-curve in JACCARD: a contained-but-tiny excerpt has low
     jaccard and can be missed — that is the documented trade; where
     excerpt recall matters, raise ``bands`` (more, narrower bands) or
-    run the exact primitive with a stop-shingle cap. Verification uses
-    the candidate-join counting form only (no ``collect_list``), so
-    per-row width is O(1) regardless of document size — the 100 TB
-    setting.
+    run the exact primitive with a stop-shingle cap. Verification is
+    the bounded-memory ``verify='join'`` form (:func:`_intersect`).
     """
+    lsh_bands = _lsh_bands(num_hashes, bands)
     sh = shingle_sets(df, text_col, n)
     if max_shingle_df is not None:
         sh = _drop_hot_shingles(sh, max_shingle_df, site="minhash_containment:shingle_df")
     # one materialization for the signature aggregate + the two
     # candidate-side intersection joins (same move as containment_pairs)
     sh = ckpt.checkpoint(sh)
-    ids = sh.select(
-        "doc_id", F.expr(hash_id_expr("sh", MINHASH_P)).alias("sid")
+    per_doc = _minhash_per_doc(_shingle_ids(sh), num_hashes)
+    candidates = _self_candidates(_band_signatures(per_doc, lsh_bands))
+    pairs = _intersect(
+        candidates, "join", ("id_a", per_doc, sh), ("id_b", per_doc, sh)
     )
-    per_doc = ids.groupBy("doc_id").agg(
-        *_minhash_aggs(num_hashes), F.count(F.lit(1)).alias("sz")
-    )
-    band_sig = _band_signatures_df(per_doc, num_hashes, bands)
-    a, b = band_sig.alias("a"), band_sig.alias("b")
-    candidates = (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band")) & (F.col("a.sig") == F.col("b.sig")),
-        )
-        .filter(F.col("a.doc_id") < F.col("b.doc_id"))
-        .select(F.col("a.doc_id").alias("id_a"), F.col("b.doc_id").alias("id_b"))
-        .distinct()
-    )
-    inter = (
-        candidates.join(
-            sh.select(F.col("doc_id").alias("id_a"), F.col("sh").alias("_sh")),
-            "id_a",
-        )
-        .join(sh.select(F.col("doc_id").alias("id_b"), F.col("sh").alias("_sh")), ["id_b", "_sh"])
-        .groupBy("id_a", "id_b")
-        .agg(F.count(F.lit(1)).alias("inter"))
-    )
-    sza = per_doc.select(F.col("doc_id").alias("id_a"), F.col("sz").alias("sz_a"))
-    szb = per_doc.select(F.col("doc_id").alias("id_b"), F.col("sz").alias("sz_b"))
-    # un-hinted sizes joins: AQE broadcasts while small (see
-    # ngram_jaccard_pairs rationale)
-    both = inter.join(sza, "id_a").join(szb, "id_b")
-    directed = both.select(
-        F.explode(
-            F.array(
-                F.struct(
-                    F.col("id_a").alias("doc_id"),
-                    F.col("id_b").alias("host_id"),
-                    (F.col("inter") / F.col("sz_a")).alias("_ratio"),
-                ),
-                F.struct(
-                    F.col("id_b").alias("doc_id"),
-                    F.col("id_a").alias("host_id"),
-                    (F.col("inter") / F.col("sz_b")).alias("_ratio"),
-                ),
-            )
-        ).alias("d")
-    ).select("d.doc_id", "d.host_id", "d._ratio")
-    return (
-        directed.filter(F.col("_ratio") >= threshold)
-        .withColumn("containment", q6(F.col("_ratio")))
-        .select("doc_id", "host_id", "containment")
-    )
+    return _directed_containment(pairs, threshold)
 
 
 def containment_incremental(
@@ -1488,21 +1347,10 @@ def containment_incremental(
         .groupBy("base_id", "doc_id")
         .agg(F.count(F.lit(1)).alias("inter"))
     )
-    verified = (
-        inter.join(sizes_inc, "doc_id")
-        .withColumn("_ratio", F.col("inter") / F.col("sz_inc"))
-        # raw-ratio threshold, q6-rounded emit (module convention)
-        .filter(F.col("_ratio") >= threshold)
-        .withColumn("containment", q6(F.col("_ratio")))
+    matches = inter.join(sizes_inc, "doc_id").withColumn(
+        "_ratio", F.col("inter") / F.col("sz_inc")
     )
-    w = Window.partitionBy("doc_id").orderBy(
-        F.desc("containment"), F.asc("base_id")
-    )
-    return (
-        verified.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") == 1)
-        .select("doc_id", "base_id", "containment")
-    )
+    return _best_per_doc(_over(matches, threshold, "containment"), "containment")
 
 
 @ckpt.scope()

@@ -402,7 +402,3 @@ def _save_markdown(
         fh.write("\n".join(parts))
     logger.info("report written: %s", path)
     return path
-
-
-# Backwards-compat: True now that the PDF path needs no external deps.
-HAVE_PDF = True

@@ -123,58 +123,40 @@ def rowwise_band_signatures(
     """Per-doc MinHash band signatures computed ROW-WISE — tokenize →
     shingle → md5 sid → K mixer mins as narrow array expressions, no
     groupBy — bit-identical to the batch pipeline
-    (``dedup._band_signatures_df(_minhash_wide(_shingle_ids(
-    shingle_sets(...))))``): min over ``array_distinct`` equals min
-    over the exploded distinct rows, and the TOKENIZE /
-    ``_shingle_expr`` / ``hash_id_expr`` / mixer fragments are the
-    shared definitions (pinned by test_round10_ops). Shuffle-free, so
-    it is legal ahead of a streaming stateful aggregation (the batch
-    form's groupBy would be a second stateful op there).
+    (``dedup._band_signatures(dedup._minhash_per_doc(...))``): min over
+    ``array_distinct`` equals min over the exploded distinct rows, and
+    the TOKENIZE / ``_shingle_expr`` / ``hash_id_expr`` / ``_mixer`` /
+    ``_lsh_bands`` fragments are the shared definitions (pinned by
+    test_round10_ops). Shuffle-free, so it is legal ahead of a
+    streaming stateful aggregation (the batch form's groupBy would be a
+    second stateful op there).
 
     Docs with no shingles (< ``n`` tokens) emit nothing — the batch
     contract. Output: (doc_id, *carry, band, sig).
     """
     from sales_data_etl_pipeline_spark.operators.dedup import (
         MINHASH_P,
+        _band_signatures,
+        _lsh_bands,
+        _mixer,
         _shingle_expr,
         hash_id_expr,
     )
     from sales_data_etl_pipeline_spark.operators.text import TOKENIZE
 
-    rows = num_hashes // bands
-    toks = TOKENIZE.format(col=text_col)
-    shs = _shingle_expr(toks, n)
+    lsh_bands = _lsh_bands(
+        num_hashes,
+        bands,
+        lambda k: F.expr(f"array_min(transform(_sids, s -> {_mixer(k, 's')}))"),
+    )
+    shs = _shingle_expr(TOKENIZE.format(col=text_col), n)
     sids = f"transform({shs}, x -> {hash_id_expr('x', MINHASH_P)})"
-    mh = [
-        (
-            f"array_min(transform(_sids, s -> "
-            f"pmod(({2 * k + 1}) * s + ({3 * k + 7}), {MINHASH_P}L)))"
-        )
-        for k in range(num_hashes)
-    ]
-    band_structs = [
-        F.struct(
-            F.lit(b).alias("band"),
-            F.concat_ws(
-                ",", *[F.expr(mh[b * rows + r]) for r in range(rows)]
-            ).alias("sig"),
-        )
-        for b in range(bands)
-    ]
-    return (
-        docs.select("doc_id", *carry, F.expr(sids).alias("_sids"))
-        .filter(F.size("_sids") > 0)
-        .select(
-            "doc_id",
-            *carry,
-            F.explode(F.array(*band_structs)).alias("bs"),
-        )
-        .select(
-            "doc_id",
-            *carry,
-            F.col("bs.band").alias("band"),
-            F.col("bs.sig").alias("sig"),
-        )
+    return _band_signatures(
+        docs.select("doc_id", *carry, F.expr(sids).alias("_sids")).filter(
+            F.size("_sids") > 0
+        ),
+        lsh_bands,
+        ("doc_id", *carry),
     )
 
 
@@ -196,7 +178,7 @@ def minhash_band_buckets(
 
     The MinHash signature is computed ROW-WISE — tokenize → shingle →
     md5 sid → K mixer mins, all as narrow array expressions (no
-    shuffle, exactly the per-doc values of ``dedup._minhash_wide``:
+    shuffle, exactly the per-doc values of ``dedup._minhash_per_doc``:
     min over ``array_distinct`` equals min over the exploded distinct
     rows, same TOKENIZE/_shingle_expr/hash_id_expr fragments) — then
     bands explode to (band, sig) keys and ONE stateful aggregation

@@ -166,12 +166,11 @@ def test_rowwise_band_signatures_match_batch(spark):
             Row(doc_id=6, text=""),
         ]
     )
-    batch = dedup._band_signatures_df(
-        dedup._minhash_wide(
+    batch = dedup._band_signatures(
+        dedup._minhash_per_doc(
             dedup._shingle_ids(dedup.shingle_sets(docs)), 16
         ),
-        16,
-        4,
+        dedup._lsh_bands(16, 4),
     )
     rowwise = streaming.rowwise_band_signatures(docs)
     got = sorted(map(tuple, rowwise.collect()))
@@ -183,6 +182,23 @@ def test_rowwise_band_signatures_match_batch(spark):
         by_doc.setdefault(doc_id, set()).add((band, sig))
     assert by_doc[1] == by_doc[4]
     assert 5 not in by_doc and 6 not in by_doc
+
+
+@pytest.mark.parametrize("bands", [0, 5, 32])
+def test_band_split_must_divide_num_hashes(spark, bands):
+    """A band split must be whole: bands=0 would divide by zero, bands >
+    num_hashes bands zero rows (every doc shares the signature '' in
+    every band, so the candidate join is all pairs), and 16 % 5 drops a
+    hash. Batch and streaming banding both reject them up front."""
+    from sales_data_etl_pipeline_spark.streaming import events as streaming
+
+    docs = spark.createDataFrame(
+        [Row(doc_id=1, text="the quick brown fox jumps over the lazy dog")]
+    )
+    with pytest.raises(ValueError, match="bands"):
+        dedup.minhash_lsh_pairs(docs, num_hashes=16, bands=bands)
+    with pytest.raises(ValueError, match="bands"):
+        streaming.rowwise_band_signatures(docs, num_hashes=16, bands=bands)
 
 
 def test_cosine_range_topk_bounds_hubs_and_matches_naive(spark):
