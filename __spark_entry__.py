@@ -44,6 +44,32 @@ def entry(spark: SparkSession) -> DataFrame:
 # tools/check_correctness.py -> CORRECTNESS_LOCAL.json); drop it once a
 # CORRECTNESS_r*.json row shows it green after the change.
 _CHANGED = [
+    "dedup_embedding_cosine",
+    "dedup_embedding_lsh",
+    "dedup_incremental_prepared",
+    "dedup_semantic",
+    "embedding_kmeans_assign",
+    "embedding_kmeans_train",
+    "embedding_knn_label",
+    "embedding_pca_power",
+    "embedding_pq_encode",
+    "graph_label_propagation",
+    "graph_pagerank",
+    "similarity_knn_graph",
+    "similarity_range_join",
+    "similarity_range_topk",
+    "similarity_recall_eval",
+    "similarity_recall_hamming",
+    "similarity_recall_hamming12",
+    "similarity_topk",
+    "similarity_topk_hamming",
+    "similarity_topk_hamming_rerank",
+    "similarity_topk_ivf",
+    "similarity_topk_ivf_trained",
+    "similarity_topk_ivfpq",
+    "similarity_topk_ivfpq_residual",
+    "similarity_topk_lsh",
+    "similarity_topk_pq",
     "clean_et_chain",
     "clean_keys_chain",
     "corpus_dedup_pipeline",
@@ -60,15 +86,12 @@ _CHANGED = [
     "events_rolling_active_users",
     "events_user_value_deciles",
     "graph_kcore",
-    "graph_label_propagation",
     "graph_link_prediction",
     "graph_link_prediction_aa",
-    "graph_pagerank",
     "graph_triangle_count",
     "multimodal_phash_pairs",
     "q11_important_parts",
     "q15_top_supplier",
-    "similarity_recall_eval",
     "table_zorder_layout",
     "streaming_dedup",
     "streaming_stream_join",
@@ -79,22 +102,14 @@ _CHANGED = [
     "corpus_curriculum_order",
     "corpus_domain_cap",
     "corpus_dsir_weights",
-    "dedup_embedding_cosine",
-    "dedup_embedding_lsh",
     "dedup_incremental_containment",
     "dedup_incremental_join",
-    "dedup_incremental_prepared",
     "dedup_levenshtein",
     "dedup_minhash_containment",
     "dedup_minhash_lsh",
     "dedup_ngram_jaccard",
-    "dedup_semantic",
     "dedup_simhash",
     "dedup_winnowing",
-    "embedding_kmeans_assign",
-    "embedding_kmeans_train",
-    "embedding_knn_label",
-    "embedding_pca_power",
     "events_asof_join",
     "events_asof_join_forward",
     "events_attribution_linear",
@@ -104,9 +119,6 @@ _CHANGED = [
     "events_markov_transitions",
     "events_range_count",
     "events_session_funnel",
-    "similarity_recall_hamming",
-    "similarity_topk_ivf_trained",
-    "similarity_topk_ivfpq_residual",
     "streaming_dedup_minhash",
     "streaming_dedup_minhash_append",
     "streaming_session_funnel",

@@ -31,7 +31,14 @@ from pyspark.sql import functions as F
 
 from sales_data_etl_pipeline_spark import catalog
 from sales_data_etl_pipeline_spark.operators import ckpt
+from sales_data_etl_pipeline_spark.operators.similarity import (
+    _band_signatures as _hyperplane_bands,
+    _cosine,
+    _live,
+    hyperplane_signs,
+)
 from sales_data_etl_pipeline_spark.operators.text import TOKENIZE
+from sales_data_etl_pipeline_spark.session import shuffle_width
 
 #: MinHash mixer constants: h_k(sid) = ((2k+1)·sid + (3k+7)) mod P.
 #: P = 2³¹−1 (Mersenne prime): sid < P keeps (2k+1)·sid ≪ 2⁶³ (no ANSI
@@ -39,13 +46,9 @@ from sales_data_etl_pipeline_spark.operators.text import TOKENIZE
 #: negligible (n²/2P even at millions of shingles per corpus).
 MINHASH_P = 2_147_483_647
 
-#: Spark SQL predicate: every element of vector column {v} is finite.
-#: Needed because Spark orders NaN ABOVE all doubles, so ``norm > 0``
-#: alone admits NaN vectors that DuckDB's NULL semantics reject.
-FINITE_VEC = (
-    "NOT exists({v}, x -> x IS NULL OR isnan(cast(x as double))"
-    " OR abs(cast(x as double)) = cast('Infinity' as double))"
-)
+#: Rounds between the lineage cuts of the fixed-iteration graph loops
+#: (:func:`pagerank`, :func:`label_propagation`).
+CKPT_EVERY = 8
 
 
 def q6(col: Column) -> Column:
@@ -94,16 +97,6 @@ def shingles(text_col: str = "text", n: int = 3) -> Column:
     """Distinct word n-gram shingle strings for one document."""
     toks = TOKENIZE.format(col=text_col)
     return F.expr(_shingle_expr(toks, n))
-
-
-def shuffle_width(df: DataFrame) -> int:
-    """The deployment's shuffle-parallelism knob:
-    ``spark.sql.shuffle.partitions``, falling back to
-    ``defaultParallelism`` on non-numeric vendor values ("auto")."""
-    try:
-        return int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
-    except (TypeError, ValueError):
-        return df.sparkSession.sparkContext.defaultParallelism
 
 
 def fan_out(df: DataFrame, *cols: str) -> DataFrame:
@@ -708,44 +701,15 @@ def embedding_near_dup_pairs(
 
     Cosine via a sequential double fold (deterministic order → identical
     IEEE result across engines). Brute-force pairwise; the scale path is
-    the IVF/LSH bucketing in ``operators.similarity``.
+    the IVF/LSH bucketing in ``operators.similarity``. Dead (zero-norm
+    or non-finite) vectors never pair: the ``similarity`` vector
+    contract, mirrored by the oracles' isfinite().
     """
-    # zero-norm vectors have undefined cosine, and non-finite (NaN/Inf)
-    # vectors must not band or verify at all (Spark compares NaN > 0 as
-    # TRUE, so a plain norm filter would PASS a NaN vector): exclude
-    # both up front (same contract as similarity.cosine_topk; oracles
-    # mirror it with isfinite())
-    _nrm = (
-        "sqrt(aggregate(transform({v}, x -> cast(x as double)),"
-        " 0D, (acc, x) -> acc + x * x))"
-    )
-    emb = emb.filter(
-        F.expr(FINITE_VEC.format(v=vec_col))
-        & (F.expr(_nrm.format(v=vec_col)) > 0)
-    )
-    dot = (
-        "aggregate(zip_with(transform(a.{v}, x -> cast(x as double)),"
-        " transform(b.{v}, x -> cast(x as double)), (x, y) -> x * y),"
-        " 0D, (acc, x) -> acc + x)"
-    ).format(v=vec_col)
-    norm = (
-        "sqrt(aggregate(transform({side}.{v}, x -> cast(x as double)),"
-        " 0D, (acc, x) -> acc + x * x))"
-    )
+    emb = emb.filter(_live(vec_col))
     a, b = emb.alias("a"), emb.alias("b")
     return (
         a.join(b, F.col(f"a.{id_col}") < F.col(f"b.{id_col}"))
-        .withColumn(
-            "cosine",
-            F.round(
-                F.expr(dot)
-                / (
-                    F.expr(norm.format(side="a", v=vec_col))
-                    * F.expr(norm.format(side="b", v=vec_col))
-                ),
-                6,
-            ),
-        )
+        .withColumn("cosine", _cosine(f"a.{vec_col}", f"b.{vec_col}"))
         .filter(F.col("cosine") >= threshold)
         .select(
             F.col(f"a.{id_col}").alias("id_a"),
@@ -753,23 +717,6 @@ def embedding_near_dup_pairs(
             "cosine",
         )
     )
-
-
-def hyperplane_signs(planes: int, dim: int) -> list[list[float]]:
-    """Deterministic ±1 random-hyperplane matrix (planes × dim).
-
-    Entries come from md5 of "plane:dim" — reproducible anywhere
-    (Python, Spark literal, DuckDB literal) with no RNG or seed state.
-    """
-    import hashlib
-
-    return [
-        [
-            1.0 if int(hashlib.md5(f"{b}:{d}".encode()).hexdigest()[:8], 16) % 2 else -1.0
-            for d in range(dim)
-        ]
-        for b in range(planes)
-    ]
 
 
 def embedding_lsh_pairs(
@@ -789,32 +736,15 @@ def embedding_lsh_pairs(
     ``bands`` bands, vectors agreeing on ALL bits of any band become
     candidates (P[bit match] = 1 − θ/π, so banding is steep in cosine
     exactly as minhash banding is in jaccard). Candidates are verified
-    with the exact cosine. Projections use the sequential double fold +
-    round-to-6dp convention so DuckDB reproduces every sign bit.
+    with the exact cosine. Band signatures come from the
+    ``similarity._band_signatures`` kernel (left-associated dim fold +
+    round-to-6dp sign, so DuckDB reproduces every sign bit); dead
+    vectors never band or verify (the ``similarity`` vector contract).
     """
-    from sales_data_etl_pipeline_spark.operators.similarity import (
-        _band_signatures,
+    emb = emb.filter(_live(vec_col))
+    band_sig = _hyperplane_bands(
+        emb, hyperplane_signs(planes, dim), bands, out_id=id_col, vec_col=vec_col
     )
-
-    # zero-norm vectors have undefined cosine, and non-finite (NaN/Inf)
-    # vectors must not band or verify at all (Spark compares NaN > 0 as
-    # TRUE, so a plain norm filter would PASS a NaN vector): exclude
-    # both up front (same contract as similarity.cosine_topk; oracles
-    # mirror it with isfinite())
-    _nrm = (
-        "sqrt(aggregate(transform({v}, x -> cast(x as double)),"
-        " 0D, (acc, x) -> acc + x * x))"
-    )
-    emb = emb.filter(
-        F.expr(FINITE_VEC.format(v=vec_col))
-        & (F.expr(_nrm.format(v=vec_col)) > 0)
-    )
-    R = hyperplane_signs(planes, dim)
-    # Vectorized Arrow kernel, left-associated dim fold + 6dp-round sign
-    # (bit-identical to the expression form, which exceeds janino's
-    # 64 KB codegen limit at 32 planes and fell back to interpreted
-    # evaluation — ~10× slower; see similarity._band_signatures).
-    band_sig = _band_signatures(emb, R, bands, out_id=id_col, vec_col=vec_col)
     a, b = band_sig.alias("a"), band_sig.alias("b")
     candidates = (
         a.join(
@@ -827,15 +757,6 @@ def embedding_lsh_pairs(
         )
         .distinct()
     )
-    dot = (
-        "aggregate(zip_with(transform(a.{v}, x -> cast(x as double)),"
-        " transform(b.{v}, x -> cast(x as double)), (x, y) -> x * y),"
-        " 0D, (acc, x) -> acc + x)"
-    ).format(v=vec_col)
-    norm = (
-        "sqrt(aggregate(transform({side}.{v}, x -> cast(x as double)),"
-        " 0D, (acc, x) -> acc + x * x))"
-    )
     ea, eb = emb.alias("a"), emb.alias("b")
     return (
         candidates.join(ea, F.col("id_a") == F.col(f"a.{id_col}"))
@@ -847,17 +768,7 @@ def embedding_lsh_pairs(
         # exchange — pinned width, no extra shuffle.
         .repartition(shuffle_width(emb), F.col("id_b"))
         .join(eb, F.col("id_b") == F.col(f"b.{id_col}"))
-        .withColumn(
-            "cosine",
-            F.round(
-                F.expr(dot)
-                / (
-                    F.expr(norm.format(side="a", v=vec_col))
-                    * F.expr(norm.format(side="b", v=vec_col))
-                ),
-                6,
-            ),
-        )
+        .withColumn("cosine", _cosine(f"a.{vec_col}", f"b.{vec_col}"))
         .filter(F.col("cosine") >= threshold)
         .select("id_a", "id_b", "cosine")
     )
@@ -1154,6 +1065,20 @@ def save_minhash_base(
     overwrite_table(
         band_sig, f"{table_prefix}_band_sig", bucket_by=(buckets, "sig")
     )
+    props = ", ".join(
+        f"'{k}' = '{v}'" for k, v in _base_params(num_hashes, bands, n).items()
+    )
+    spark.sql(f"ALTER TABLE {table_prefix}_band_sig SET TBLPROPERTIES ({props})")
+
+
+def _base_params(num_hashes: int, bands: int, n: int) -> dict[str, str]:
+    """The parameters a saved MinHash base is built with, as the table
+    properties :func:`save_minhash_base` records on ``{prefix}_band_sig``."""
+    return {
+        "minhash.num_hashes": str(num_hashes),
+        "minhash.bands": str(bands),
+        "minhash.n": str(n),
+    }
 
 
 def minhash_lsh_incremental_prepared(
@@ -1181,8 +1106,24 @@ def minhash_lsh_incremental_prepared(
     by doc_id so the intersect join never shuffles it. Output contract
     is identical to :func:`minhash_lsh_incremental`: (doc_id, base_id,
     jaccard), best base match per incoming doc.
+
+    The base must have been saved with this call's ``num_hashes``,
+    ``bands`` and ``n`` (band keys built otherwise never meet):
+    ``ValueError`` before any job runs when its recorded parameters
+    differ or are missing.
     """
     lsh_bands = _lsh_bands(num_hashes, bands)
+    saved = {
+        r["key"]: r["value"]
+        for r in spark.sql(f"SHOW TBLPROPERTIES {table_prefix}_band_sig").collect()
+    }
+    want = _base_params(num_hashes, bands, n)
+    got = {k: saved.get(k) for k in want}
+    if got != want:
+        raise ValueError(
+            f"MinHash base {table_prefix!r} was saved with {got}, not {want}:"
+            " rebuild it with save_minhash_base"
+        )
     base_pd = spark.table(f"{table_prefix}_per_doc")
     sh_base = spark.table(f"{table_prefix}_shingles")
     sh_inc = shingle_sets(incoming, text_col, n)
@@ -1360,7 +1301,6 @@ def pagerank(
     iterations: int = 3,
     id_a: str = "id_a",
     id_b: str = "id_b",
-    ckpt_every: int = 8,
 ) -> DataFrame:
     """Fixed-iteration PageRank over an undirected pair graph (e.g. the
     near-dup candidate graph: a high-rank document is a hub quoted/
@@ -1393,7 +1333,7 @@ def pagerank(
     each round references the prior ranks exactly ONCE (the share
     pass), so the plan grows linearly, not exponentially — the
     per-round eager checkpoint the doubled-reference form needed
-    (r15 and earlier) is replaced by a ``ckpt_every`` CADENCE cut
+    (r15 and earlier) is replaced by a :data:`CKPT_EVERY` CADENCE cut
     (plan depth and un-releasable block residue both bounded by the
     cadence; a 30-round production run cuts every 8 rounds instead of
     paying a materialization round trip per round — at the sf0.1 gate
@@ -1451,7 +1391,7 @@ def pagerank(
                 "150000000L div _n + (85L * coalesce(_in, 0L)) div 100L"
             ).alias("rank_ppb"),
         )
-        if i % ckpt_every == 0 and i < iterations:
+        if i % CKPT_EVERY == 0 and i < iterations:
             ranks = ckpt.checkpoint(ranks)
             ckpt.release(cadence)
             cadence = ranks
@@ -1684,7 +1624,6 @@ def label_propagation(
     iterations: int = 2,
     id_a: str = "id_a",
     id_b: str = "id_b",
-    ckpt_every: int = 8,
 ) -> DataFrame:
     """Synchronous label-propagation communities (Raghavan et al. 2007,
     arXiv:0709.2938) over an undirected pair list — the cheap
@@ -1705,7 +1644,7 @@ def label_propagation(
     label table (both keyed shuffles) + one (node, label) count with
     map-side combine + one per-node min — reducer width bounded by
     degree, same as pagerank's share pass; labels localCheckpoint on
-    the ``ckpt_every`` cadence (the pagerank lineage discipline —
+    the :data:`CKPT_EVERY` cadence (the pagerank lineage discipline —
     plan depth and block residue bounded by the cadence, no per-round
     materialization round trip).
     """
@@ -1724,7 +1663,7 @@ def label_propagation(
     # each round references the prior labels exactly ONCE (the
     # neighbor join), so the plan grows linearly and the former
     # per-round eager checkpoint (a full materialization round trip
-    # per iteration) is replaced by a ``ckpt_every`` cadence cut —
+    # per iteration) is replaced by a CKPT_EVERY cadence cut —
     # the whole fixed-iteration unroll runs as ONE action whose
     # independent stages AQE materializes concurrently (r16; the
     # pagerank discipline)
@@ -1744,7 +1683,7 @@ def label_propagation(
             )
             .select(F.col("src").alias("node"), F.col("_m.label").alias("label"))
         )
-        if i % ckpt_every == 0 and i < iterations:
+        if i % CKPT_EVERY == 0 and i < iterations:
             labels = ckpt.checkpoint(labels)
             ckpt.release(cadence)
             cadence = labels

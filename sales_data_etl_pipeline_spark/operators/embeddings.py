@@ -19,8 +19,18 @@ fold order of the norm is identical (sequential left fold in Spark
 
 from __future__ import annotations
 
+import sys
+
+import numpy as np
+import pandas as pd
+from pyspark import cloudpickle
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+# The encode kernel calls this module's numpy steps on the executors,
+# whose Python workers need not have this package on their path: ship
+# the steps by value.
+cloudpickle.register_pickle_by_value(sys.modules[__name__])
 
 #: sum of squares as a sequential left fold (matches DuckDB list_aggregate)
 _NORM = (
@@ -155,6 +165,68 @@ PQ_SCALE = 16
 PQ_CLAMP = 127
 
 
+def _grid(X: np.ndarray) -> np.ndarray:
+    """Float rows onto the shared integer grid:
+    ``clamp(round(x·PQ_SCALE), ±PQ_CLAMP)``, int64."""
+    return np.clip(np.floor(X * PQ_SCALE + 0.5), -PQ_CLAMP, PQ_CLAMP).astype(
+        np.int64
+    )
+
+
+def _block_size(dim: int, n_blocks: int) -> int:
+    if dim % n_blocks:
+        raise ValueError(f"dim {dim} not divisible by n_blocks {n_blocks}")
+    return dim // n_blocks
+
+
+def _nearest(X: np.ndarray, C: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+    """Per grid row of ``X``: the index of its nearest row of ``C`` by
+    exact int64 squared L2 (the FIRST minimum — rows of ``C`` sorted by
+    id make the tie-break the smallest id) and that distance."""
+    diff = X[:, None, :] - C[None, :, :]
+    d2 = (diff * diff).sum(axis=2)
+    best = d2.argmin(axis=1)
+    return best, d2[np.arange(len(X)), best]
+
+
+def _block_codes(
+    X: np.ndarray, C: np.ndarray, c_ids: np.ndarray, n_blocks: int
+) -> tuple[list[str], np.ndarray]:
+    """PQ codes of grid rows ``X`` against codewords ``C`` (ids
+    ``c_ids``), block by block over ``C``'s dims: the comma-joined
+    nearest-codeword ids and the summed exact quantization error."""
+    bs = _block_size(C.shape[1], n_blocks)
+    codes = np.empty((len(X), n_blocks), dtype=np.int64)
+    d2 = np.zeros(len(X), dtype=np.int64)
+    for m in range(n_blocks):
+        block = slice(m * bs, (m + 1) * bs)
+        best, dist = _nearest(X[:, block], C[:, block])
+        codes[:, m] = c_ids[best]
+        d2 += dist
+    return [",".join(map(str, row)) for row in codes], d2
+
+
+def _encode_scan(
+    corpus: DataFrame, id_col: str, vec_col: str, out_schema: str, codes_of
+) -> DataFrame:
+    """One narrow Arrow pass over the corpus: the finite rows of each
+    batch go onto the grid, and ``codes_of(grid rows)`` returns the
+    output columns beside the id. Non-finite rows are dropped (the
+    module's FINITE contract)."""
+
+    def encode(batches):
+        for pdf in batches:
+            if not len(pdf):
+                continue
+            V = np.array(list(pdf[vec_col]), dtype=np.float64)
+            live = np.isfinite(V).all(axis=1)
+            if live.any():
+                ids = pdf[id_col].to_numpy(dtype=np.int64)[live]
+                yield pd.DataFrame({id_col: ids, **codes_of(_grid(V[live]))})
+
+    return corpus.select(id_col, vec_col).mapInPandas(encode, out_schema)
+
+
 def pq_encode(
     corpus: DataFrame,
     codebook: DataFrame,
@@ -183,88 +255,36 @@ def pq_encode(
 
     Execution shape mirrors :func:`~sales_data_etl_pipeline_spark.operators.similarity.kmeans_assign`:
     the codebook is collected once (K·dim — codebooks are small by
-    definition) into an Arrow kernel; each batch scores all blocks
-    against all centroids in vectorized integer numpy. Zero shuffles —
-    the encode is embarrassingly parallel, the 100 TB path.
+    definition, :func:`_collect_grid`) into an Arrow kernel
+    (:func:`_encode_scan`); each batch scores all blocks against all
+    centroids in vectorized integer numpy (:func:`_block_codes`). Zero
+    shuffles — the encode is embarrassingly parallel, the 100 TB path.
 
     Output: (id, codes, d2_total) — ``codes`` the comma-joined
     per-block centroid ids (block order), ``d2_total`` the summed
     quantization error (exact bigint).
     """
-    import numpy as np
-    import pandas as pd
-
-    c_rows = sorted(
-        codebook.select(centroid_id_col, vec_col).collect(), key=lambda r: r[0]
-    )
-    C_raw = [
-        (int(r[0]), np.asarray(r[1], dtype=np.float64))
-        for r in c_rows
-        if r[1] is not None
-    ]
-    C_raw = [
-        (cid, v) for cid, v in C_raw if np.isfinite(v).all()
-    ]
+    c_ids, C = _collect_grid(codebook, centroid_id_col, vec_col)
     out_schema = f"{id_col} long, codes string, d2_total long"
-    if not C_raw:
+    if C is None:
         # empty (or all-non-finite) codebook: no code is definable —
         # return the schema-correct EMPTY result, matching the oracle,
         # whose finite-filtered codebook CTE yields zero rows (an empty
         # partition is routine at scale, not an error)
         return corpus.sparkSession.createDataFrame([], out_schema)
-    c_ids = np.array([cid for cid, _ in C_raw], dtype=np.int64)
-    C = np.clip(
-        np.floor(np.stack([v for _, v in C_raw]) * PQ_SCALE + 0.5),
-        -PQ_CLAMP,
-        PQ_CLAMP,
-    ).astype(np.int64)
-    dim = C.shape[1]
-    if dim % n_blocks:
-        raise ValueError(f"dim {dim} not divisible by n_blocks {n_blocks}")
-    bs = dim // n_blocks
+    _block_size(C.shape[1], n_blocks)  # raise here, not in the scan
 
-    def encode(batches):
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            ids = pdf[id_col].to_numpy(dtype=np.int64)
-            V = np.array(list(pdf[vec_col]), dtype=np.float64)
-            live = np.isfinite(V).all(axis=1)
-            if not live.any():
-                continue
-            Q = np.clip(
-                np.floor(V[live] * PQ_SCALE + 0.5), -PQ_CLAMP, PQ_CLAMP
-            ).astype(np.int64)
-            codes = np.empty((len(Q), n_blocks), dtype=np.int64)
-            d2 = np.zeros(len(Q), dtype=np.int64)
-            for m in range(n_blocks):
-                qb = Q[:, m * bs : (m + 1) * bs]
-                cb = C[:, m * bs : (m + 1) * bs]
-                diff = qb[:, None, :] - cb[None, :, :]
-                dist = (diff * diff).sum(axis=2)
-                # argmin returns the FIRST minimum; centroids are sorted
-                # ascending by id, so the tie-break is smallest id
-                best = dist.argmin(axis=1)
-                codes[:, m] = c_ids[best]
-                d2 += dist[np.arange(len(Q)), best]
-            yield pd.DataFrame(
-                {
-                    id_col: ids[live],
-                    "codes": [",".join(map(str, row)) for row in codes],
-                    "d2_total": d2,
-                }
-            )
+    def codes_of(Q):
+        codes, d2 = _block_codes(Q, C, c_ids, n_blocks)
+        return {"codes": codes, "d2_total": d2}
 
-    return corpus.select(id_col, vec_col).mapInPandas(encode, out_schema)
+    return _encode_scan(corpus, id_col, vec_col, out_schema, codes_of)
 
 
 def _collect_grid(df, id_col: str, vec_col: str):
     """Collect a small vector table onto the shared integer grid
-    (``clamp(round(x·PQ_SCALE), ±PQ_CLAMP)``): (ids int64[], grid
-    int64[n, dim]), finite rows only, sorted by id. Returns (None,
-    None) when nothing survives."""
-    import numpy as np
-
+    (:func:`_grid`): (ids int64[], grid int64[n, dim]), finite rows
+    only, sorted by id. Returns (None, None) when nothing survives."""
     rows = sorted(df.select(id_col, vec_col).collect(), key=lambda r: r[0])
     raw = [
         (int(r[0]), np.asarray(r[1], dtype=np.float64))
@@ -275,12 +295,7 @@ def _collect_grid(df, id_col: str, vec_col: str):
     if not raw:
         return None, None
     ids = np.array([i for i, _ in raw], dtype=np.int64)
-    G = np.clip(
-        np.floor(np.stack([v for _, v in raw]) * PQ_SCALE + 0.5),
-        -PQ_CLAMP,
-        PQ_CLAMP,
-    ).astype(np.int64)
-    return ids, G
+    return ids, _grid(np.stack([v for _, v in raw]))
 
 
 def residual_codewords(
@@ -297,8 +312,6 @@ def residual_codewords(
     a codeword. Returns (coarse_ids, coarse_grid, code_ids,
     residual_grid) as numpy int64 arrays — all-small inputs by
     definition (codebooks), so the collect is K·dim."""
-    import numpy as np
-
     c_ids, C = _collect_grid(coarse, centroid_id_col, vec_col)
     if C is None:
         return None, None, None, None
@@ -309,10 +322,8 @@ def residual_codewords(
         raise ValueError(
             f"residual codebook dim {RG.shape[1]} != coarse dim {C.shape[1]}"
         )
-    diff = RG[:, None, :] - C[None, :, :]
-    best = (diff * diff).sum(axis=2).argmin(axis=1)  # ties: smallest id
-    RC = RG - C[best]
-    return c_ids, C, r_ids, RC
+    best, _ = _nearest(RG, C)
+    return c_ids, C, r_ids, RG - C[best]
 
 
 def pq_encode_residual(
@@ -337,16 +348,13 @@ def pq_encode_residual(
 
     Execution shape mirrors :func:`pq_encode`: both codebooks are
     collected once (K·dim each) into one Arrow kernel; per batch, ONE
-    assignment matmul + M block argmins in vectorized integer numpy.
+    list assignment + M block argmins in vectorized integer numpy.
     Zero shuffles — embarrassingly parallel, the 100 TB path.
 
     Output: (id, list_id, codes, d2_total) — codes the comma-joined
     residual codeword ids (block order), d2_total the exact residual
     quantization error.
     """
-    import numpy as np
-    import pandas as pd
-
     c_ids, C, r_ids, RC = residual_codewords(
         coarse,
         residual_codebook,
@@ -358,46 +366,14 @@ def pq_encode_residual(
         # no coarse lists or no codewords: no code definable — the
         # schema-correct EMPTY result (matches the oracle's empty CTEs)
         return corpus.sparkSession.createDataFrame([], out_schema)
-    dim = C.shape[1]
-    if dim % n_blocks:
-        raise ValueError(f"dim {dim} not divisible by n_blocks {n_blocks}")
-    bs = dim // n_blocks
+    _block_size(C.shape[1], n_blocks)  # raise here, not in the scan
 
-    def encode(batches):
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            ids = pdf[id_col].to_numpy(dtype=np.int64)
-            V = np.array(list(pdf[vec_col]), dtype=np.float64)
-            live = np.isfinite(V).all(axis=1)
-            if not live.any():
-                continue
-            Q = np.clip(
-                np.floor(V[live] * PQ_SCALE + 0.5), -PQ_CLAMP, PQ_CLAMP
-            ).astype(np.int64)
-            cd = Q[:, None, :] - C[None, :, :]
-            best_list = (cd * cd).sum(axis=2).argmin(axis=1)
-            R = Q - C[best_list]
-            codes = np.empty((len(Q), n_blocks), dtype=np.int64)
-            d2 = np.zeros(len(Q), dtype=np.int64)
-            for m in range(n_blocks):
-                rb = R[:, m * bs : (m + 1) * bs]
-                cb = RC[:, m * bs : (m + 1) * bs]
-                diff = rb[:, None, :] - cb[None, :, :]
-                dist = (diff * diff).sum(axis=2)
-                best = dist.argmin(axis=1)  # ties: smallest codeword id
-                codes[:, m] = r_ids[best]
-                d2 += dist[np.arange(len(Q)), best]
-            yield pd.DataFrame(
-                {
-                    id_col: ids[live],
-                    "list_id": c_ids[best_list],
-                    "codes": [",".join(map(str, row)) for row in codes],
-                    "d2_total": d2,
-                }
-            )
+    def codes_of(Q):
+        lists, _ = _nearest(Q, C)
+        codes, d2 = _block_codes(Q - C[lists], RC, r_ids, n_blocks)
+        return {"list_id": c_ids[lists], "codes": codes, "d2_total": d2}
 
-    return corpus.select(id_col, vec_col).mapInPandas(encode, out_schema)
+    return _encode_scan(corpus, id_col, vec_col, out_schema, codes_of)
 
 
 def matryoshka_levels(

@@ -1,10 +1,39 @@
 """Similarity search over an embedding column (extension layer).
 
-Baseline: brute-force cosine top-k (exact). Scale path: IVF — coarse
+Baseline: brute-force cosine top-k (exact). Scale paths: IVF — coarse
 quantization into centroid buckets, probe the closest ``n_probe``
-buckets only. Both are pure DataFrame plans; the arithmetic is a
-sequential double fold (``aggregate(zip_with(...))``) so results are
-deterministic and cross-engine reproducible.
+buckets only — hyperplane-LSH bands, packed sign words ranked by
+Hamming distance, and PQ codes scanned through distance lookup tables.
+The arithmetic is deterministic and cross-engine reproducible: the
+Spark cosine is a sequential double fold (``aggregate(zip_with(...))``),
+sign bits fold left-associated over dims, PQ distances are exact int64.
+
+Vector contract (shared with ``dedup`` and the DuckDB oracles): a vector
+is LIVE when every element is finite (:data:`FINITE_VEC`) and its L2
+norm is > 0; a dead vector has no cosine, so it never ranks, bands or
+verifies. Hyperplanes are the md5-derived ±1 matrix of
+:func:`hyperplane_signs`.
+
+Every operator is a composition of the same private steps, each written
+once:
+
+- :func:`_live` — the live-vector predicate; :func:`_finite` its
+  finite half;
+- :func:`_cosine` — the 6-dp rounded sequential-fold cosine Column over
+  :func:`_dot` / :func:`_norm`;
+- :func:`_collect` / :func:`_unit_rows` — a small table collected to
+  the driver; the numpy dead-row normalize (non-finite rows zeroed,
+  zero-norm rows dead);
+- :func:`_sign_bits` — the left-associated hyperplane sign fold (it
+  checks every vector's length against ``dim``), behind
+  :func:`_band_signatures` and :func:`_sig_words`;
+- :func:`_topk` / :func:`_neighbors` — the ``row_number`` top-k window
+  and the (query_id, neighbor_id, score, rank) ranking on it;
+- :data:`_PQ_GRID` / :func:`_on_grid` — the PQ integer grid, built from
+  ``embeddings.PQ_SCALE`` / ``PQ_CLAMP``; :func:`_probe_lists` (IVF probe
+  ranking on the grid), :func:`_code_rows`, :func:`_block_lut` (the
+  per-block distance LUT) and :func:`_adc_topk`;
+- :func:`_trunc_div` — DuckDB ``//`` integer division.
 
 At 100 TB: the corpus side partitions by bucket (IVF list), queries
 broadcast, and each bucket's scan is an independent narrow task — the
@@ -14,10 +43,76 @@ ground-truth oracle on samples.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+import hashlib
+import sys
+
+import numpy as np
+import pandas as pd
+from pyspark import cloudpickle
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from sales_data_etl_pipeline_spark.operators import ckpt
+from sales_data_etl_pipeline_spark.operators.embeddings import (
+    PQ_CLAMP,
+    PQ_SCALE,
+    _block_size,
+    pq_encode,
+    pq_encode_residual,
+    residual_codewords,
+)
+from sales_data_etl_pipeline_spark.session import shuffle_width
+
+# The Arrow kernels call this module's numpy steps on the executors,
+# whose Python workers need not have this package on their path (a
+# plain session ships no py-files): ship the steps by value.
+cloudpickle.register_pickle_by_value(sys.modules[__name__])
+
+#: Spark SQL predicate: every element of vector column {v} is finite.
+#: Needed because Spark orders NaN ABOVE all doubles, so ``norm > 0``
+#: alone admits NaN vectors that DuckDB's NULL semantics reject.
+FINITE_VEC = (
+    "NOT exists({v}, x -> x IS NULL OR isnan(cast(x as double))"
+    " OR abs(cast(x as double)) = cast('Infinity' as double))"
+)
+
+#: Integer PQ grid expression (Spark SQL): quantize a float vector onto
+#: the pq_encode grid — clamp(round(x·PQ_SCALE), ±PQ_CLAMP), BIGINT.
+_PQ_GRID = (
+    "transform({v}, x -> least(greatest("
+    f"cast(floor(cast(x as double) * {PQ_SCALE} + 0.5) as bigint),"
+    f" -{PQ_CLAMP}L), {PQ_CLAMP}L))"
+)
+
+#: Exact int64 squared-L2 over one PQ block (1-based slice offsets).
+_PQ_BLOCK_D2 = (
+    "aggregate(zip_with(slice({a}, {off}, {bs}), slice({b}, {off}, {bs}),"
+    " (x, y) -> (x - y) * (x - y)), 0L, (acc, x) -> acc + x)"
+)
+
+#: Exact int64 squared L2 between a grid vector and a centroid vector.
+_GRID_D2 = (
+    "aggregate(zip_with(_gv, _cv, (x, y) -> (x - y) * (x - y)),"
+    " 0L, (acc, x) -> acc + x)"
+)
+
+#: Exact int64 dot product of two grid vectors.
+_INT_DOT = "aggregate(zip_with({a}, {b}, (x, y) -> x * y), 0L, (acc, x) -> acc + x)"
+
+
+def hyperplane_signs(planes: int, dim: int) -> list[list[float]]:
+    """Deterministic ±1 random-hyperplane matrix (planes × dim).
+
+    Entries come from md5 of "plane:dim" — reproducible anywhere
+    (Python, Spark literal, DuckDB literal) with no RNG or seed state.
+    """
+    return [
+        [
+            1.0 if int(hashlib.md5(f"{b}:{d}".encode()).hexdigest()[:8], 16) % 2 else -1.0
+            for d in range(dim)
+        ]
+        for b in range(planes)
+    ]
 
 
 def _dot(a: str, b: str) -> str:
@@ -32,6 +127,70 @@ def _norm(v: str) -> str:
     return (
         f"sqrt(aggregate(transform({v}, x -> cast(x as double)),"
         " 0D, (acc, x) -> acc + x * x))"
+    )
+
+
+def _cosine(a: str, b: str) -> Column:
+    """Cosine of vector columns ``a`` and ``b`` rounded to 6 dp: the
+    sequential double fold DuckDB's ``list_aggregate`` reproduces."""
+    return F.round(F.expr(_dot(a, b)) / (F.expr(_norm(a)) * F.expr(_norm(b))), 6)
+
+
+def _finite(v: str) -> Column:
+    return F.expr(FINITE_VEC.format(v=v))
+
+
+def _live(v: str) -> Column:
+    """Finite and nonzero-norm: the vectors that have a cosine (Spark
+    compares NaN > 0 as TRUE, so the norm test alone would pass NaN)."""
+    return _finite(v) & (F.expr(_norm(v)) > 0)
+
+
+def _collect(df: DataFrame, id_col: str, vec_col: str, rows: list | None = None):
+    """A small (id, vector) table on the driver, sorted by id: (ids
+    int64[], vectors). ``rows`` skips the collect when given."""
+    if rows is None:
+        rows = df.select(id_col, vec_col).collect()
+    rows = sorted(rows, key=lambda r: r[0])
+    return np.array([r[0] for r in rows], dtype=np.int64), [r[1] for r in rows]
+
+
+def _unit_rows(vectors) -> tuple[np.ndarray, np.ndarray]:
+    """(unit rows, live mask) of a vector sequence. Non-finite rows are
+    dead like zero-norm ones: a failed upstream embedding job must not
+    poison ranks or crash a scan, so they become zero rows whose mask
+    is False (module contract, mirrored by the oracles' isfinite)."""
+    X = np.array(list(vectors), dtype=np.float64)
+    X[~np.isfinite(X).all(axis=1)] = 0.0
+    norm = np.linalg.norm(X, axis=1, keepdims=True)
+    return np.divide(X, norm, out=np.zeros_like(X), where=norm > 0), (norm > 0).ravel()
+
+
+def _topk(
+    df: DataFrame, by: list[str], order: list[Column], k: int, rank: str = "rank"
+) -> DataFrame:
+    """The first ``k`` rows of each ``by`` group in ``order``, numbered
+    1..k in column ``rank``."""
+    w = Window.partitionBy(*by).orderBy(*order)
+    return df.withColumn(rank, F.row_number().over(w)).filter(F.col(rank) <= k)
+
+
+def _neighbors(
+    scored: DataFrame,
+    *,
+    query: str,
+    neighbor: str,
+    score: str,
+    ascending: bool,
+    k: int,
+    query_as: str | None = None,
+) -> DataFrame:
+    """(query_id, neighbor_id, score, rank): each query's ``k`` best
+    neighbors by ``score``, ties → smallest neighbor id."""
+    key = F.asc(score) if ascending else F.desc(score)
+    q = F.col(query) if query_as is None else F.col(query).alias(query_as)
+    return _topk(scored, [query], [key, F.asc(neighbor)], k).select(
+        q, F.col(neighbor).alias("neighbor_id"), score, "rank"
     )
 
 
@@ -75,14 +234,7 @@ def cosine_topk(
             corpus.filter(F.expr(_norm(vec_col)) > 0)
             .crossJoin(F.broadcast(q))
             .filter(F.col(id_col) != F.col(query_id_col))
-            .withColumn(
-                "cosine",
-                F.round(
-                    F.expr(_dot("_qvec", vec_col))
-                    / (F.expr(_norm("_qvec")) * F.expr(_norm(vec_col))),
-                    6,
-                ),
-            )
+            .withColumn("cosine", _cosine("_qvec", vec_col))
         )
     else:
         scored = _pandas_scored(
@@ -93,13 +245,8 @@ def cosine_topk(
             vec_col=vec_col,
             query_id_col=query_id_col,
         )
-    w = Window.partitionBy(query_id_col).orderBy(
-        F.desc("cosine"), F.asc(id_col)
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(query_id_col, F.col(id_col).alias("neighbor_id"), "cosine", "rank")
+    return _neighbors(
+        scored, query=query_id_col, neighbor=id_col, score="cosine", ascending=False, k=k
     )
 
 
@@ -118,7 +265,7 @@ def _pandas_scored(
     desc, corpus-id asc) key the final window ranks on, so the prune is
     lossless — and emits ONE frame of ≤ k·|queries| rows per partition.
     The global window therefore shuffles O(partitions · k · |queries|)
-    rows, not |corpus| · |queries|. Self-matches and zero-norm vectors
+    rows, not |corpus| · |queries|. Self-matches and dead vectors
     (cosine undefined — see ``cosine_topk``) are masked to -inf inside
     the kernel so they can never displace a real candidate.
 
@@ -127,25 +274,14 @@ def _pandas_scored(
     with ONE ``np.lexsort`` over (query-column, -score, corpus-id) —
     exactly the final window's ordering key, so the prune stays
     lossless — instead of a Python loop of per-query sorts."""
-    import numpy as np
-    import pandas as pd
-
-    q_rows = queries.select(id_col, vec_col).collect()
+    q_ids, q_vecs = _collect(queries, id_col, vec_col)
     out_schema = f"{id_col} long, {query_id_col} long, cosine double"
-    if not q_rows:
+    if not len(q_ids):
         # empty query table (an empty partition is routine at scale):
         # the (0,)-shaped query matrix breaks every axis-1 op below —
         # the correct result is simply no ranks
         return corpus.sparkSession.createDataFrame([], out_schema)
-    q_ids = np.array([r[0] for r in q_rows], dtype=np.int64)
-    Q = np.array([r[1] for r in q_rows], dtype=np.float64)
-    # non-finite (NaN/Inf) vectors are DEAD like zero-norm ones: a
-    # failed upstream embedding job must not poison ranks or crash the
-    # scan (module contract, mirrored by the oracles' isfinite filter)
-    Q[~np.isfinite(Q).all(axis=1)] = 0.0
-    q_norm = np.linalg.norm(Q, axis=1, keepdims=True)
-    Qn = np.divide(Q, q_norm, out=np.zeros_like(Q), where=q_norm > 0)
-    dead_q = (q_norm == 0).ravel()  # zero-norm/non-finite: no neighbors
+    Qn, q_live = _unit_rows(q_vecs)  # dead queries: no neighbors
     n_q = len(q_ids)
 
     def score(batches):
@@ -156,15 +292,12 @@ def _pandas_scored(
             if not len(pdf):
                 continue
             ids = pdf[id_col].to_numpy(dtype=np.int64)
-            V = np.array(list(pdf[vec_col]), dtype=np.float64)
-            V[~np.isfinite(V).all(axis=1)] = 0.0  # dead, like zero-norm
-            v_norm = np.linalg.norm(V, axis=1, keepdims=True)
-            Vn = np.divide(V, v_norm, out=np.zeros_like(V), where=v_norm > 0)
+            Vn, v_live = _unit_rows(pdf[vec_col])
             # round BEFORE pruning: the window ranks on the rounded value
             S = np.round(Vn @ Qn.T, 6)  # (batch, n_queries)
             S[ids[:, None] == q_ids[None, :]] = -np.inf  # self-match
-            S[(v_norm == 0).ravel(), :] = -np.inf  # dead corpus rows
-            S[:, dead_q] = -np.inf
+            S[~v_live, :] = -np.inf
+            S[:, ~q_live] = -np.inf
             all_s = np.vstack([run_s, S])
             all_i = np.vstack([run_i, np.broadcast_to(ids[:, None], S.shape)])
             m = all_s.shape[0]
@@ -209,35 +342,22 @@ def assign_ivf_buckets(
     ``centroid_rows`` lets callers that already collected the centroid
     table skip the extra job.
     """
-    import numpy as np
-    import pandas as pd
-
-    c_rows = sorted(
-        centroid_rows
-        if centroid_rows is not None
-        else centroids.select(id_col, vec_col).collect(),
-        key=lambda r: r[0],
-    )
+    c_ids, c_vecs = _collect(centroids, id_col, vec_col, centroid_rows)
     out_schema = (
         f"{id_col} long, {vec_col} array<float>, {centroid_id_col} long"
     )
-    if not c_rows:
+    if not len(c_ids):
         # no centroids → no assignment is definable; empty result
         return corpus.sparkSession.createDataFrame([], out_schema)
-    c_ids = np.array([r[0] for r in c_rows], dtype=np.int64)
-    C = np.array([r[1] for r in c_rows], dtype=np.float64)
+    C = np.array(c_vecs, dtype=np.float64)
     Cn = C / np.linalg.norm(C, axis=1, keepdims=True)
 
     def assign(batches):
         for pdf in batches:
-            V = np.array(list(pdf[vec_col]), dtype=np.float64)
-            # non-finite rows score 0 everywhere → deterministic
-            # first-centroid bucket (they are dead at query time anyway)
-            V[~np.isfinite(V).all(axis=1)] = 0.0
-            v_norm = np.linalg.norm(V, axis=1, keepdims=True)
-            # zero-norm vectors score 0 vs every centroid -> deterministic
-            # assignment to the smallest centroid id (argmax first index)
-            Vn = np.divide(V, v_norm, out=np.zeros_like(V), where=v_norm > 0)
+            # dead vectors score 0 vs every centroid → deterministic
+            # assignment to the smallest centroid id (argmax first
+            # index); they are dead at query time anyway
+            Vn, _ = _unit_rows(pdf[vec_col])
             # round to 6 dp BEFORE argmax so tie-breaking (first index ==
             # smallest centroid id) matches the rank-on-rounded oracle
             S = np.round(Vn @ Cn.T, 6)
@@ -279,39 +399,25 @@ def cosine_topk_ivf(
     data-derived centroid set, e.g. the first N vectors; at scale:
     k-means|| via MLlib, then freeze the centroid table).
     """
-    import numpy as np
-    import pandas as pd
-
-    c_rows = sorted(centroids.select(id_col, vec_col).collect(), key=lambda r: r[0])
-    q_rows = sorted(queries.select(id_col, vec_col).collect(), key=lambda r: r[0])
-    if not c_rows or not q_rows:
+    c_ids, c_vecs = _collect(centroids, id_col, vec_col)
+    q_ids, q_vecs = _collect(queries, id_col, vec_col)
+    if not len(c_ids) or not len(q_ids):
         # no centroids → no probe lists; no queries → no ranks (empty
         # partitions are routine at scale, not an error)
         return corpus.sparkSession.createDataFrame(
             [], f"{query_id_col} long, neighbor_id long, cosine double,"
             " rank int"
         )
-    c_ids = np.array([r[0] for r in c_rows], dtype=np.int64)
-    q_ids = np.array([r[0] for r in q_rows], dtype=np.int64)
-    C = np.array([r[1] for r in c_rows], dtype=np.float64)
-    Q = np.array([r[1] for r in q_rows], dtype=np.float64)
+    C = np.array(c_vecs, dtype=np.float64)
     Cn = C / np.linalg.norm(C, axis=1, keepdims=True)
-    Q[~np.isfinite(Q).all(axis=1)] = 0.0  # dead, like zero-norm
-    q_norm = np.linalg.norm(Q, axis=1, keepdims=True)
-    Qn = np.divide(Q, q_norm, out=np.zeros_like(Q), where=q_norm > 0)
+    Qn, q_live = _unit_rows(q_vecs)
     S = np.round(Qn @ Cn.T, 6)
     # bucket id → boolean row over queries: does query j probe this bucket?
-    # Zero-norm queries probe nothing (cosine undefined, see cosine_topk).
-    probe_mask = {int(cid): np.zeros(len(q_rows), dtype=bool) for cid in c_ids}
-    for qi, qr in enumerate(q_rows):
-        if q_norm[qi, 0] == 0:
-            continue
+    # Dead queries probe nothing (cosine undefined, see cosine_topk).
+    probe_mask = {int(cid): np.zeros(len(q_ids), dtype=bool) for cid in c_ids}
+    for qi in np.flatnonzero(q_live):
         order = sorted(
-            (
-                (-S[qi, ci], c_rows[ci][0])
-                for ci in range(len(c_rows))
-                if c_rows[ci][0] != qr[0]
-            ),
+            (-S[qi, ci], cid) for ci, cid in enumerate(c_ids) if cid != q_ids[qi]
         )[:n_probe]
         for _, cid in order:
             probe_mask[int(cid)][qi] = True
@@ -320,15 +426,12 @@ def cosine_topk_ivf(
     def score(batches):
         for pdf in batches:
             ids = pdf[id_col].to_numpy(dtype=np.int64)
-            V = np.array(list(pdf[vec_col]), dtype=np.float64)
-            V[~np.isfinite(V).all(axis=1)] = 0.0  # dead, like zero-norm
-            v_norm = np.linalg.norm(V, axis=1, keepdims=True)
-            Vn = np.divide(V, v_norm, out=np.zeros_like(V), where=v_norm > 0)
+            Vn, v_live = _unit_rows(pdf[vec_col])
             # same rounded-argmax assignment convention as assign_ivf_buckets
             bucket = c_ids[np.argmax(np.round(Vn @ Cn.T, 6), axis=1)]
             mask = np.vstack([probe_mask[int(b)] for b in bucket])
             mask &= ids[:, None] != q_ids[None, :]
-            mask &= v_norm > 0  # dead corpus rows: never candidates
+            mask &= v_live[:, None]  # dead corpus rows: never candidates
             vi, qi = np.nonzero(mask)
             if not len(vi):
                 continue
@@ -342,11 +445,8 @@ def cosine_topk_ivf(
             )
 
     candidates = corpus.select(id_col, vec_col).mapInPandas(score, out_schema)
-    w = Window.partitionBy(query_id_col).orderBy(F.desc("cosine"), F.asc(id_col))
-    return (
-        candidates.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(query_id_col, F.col(id_col).alias("neighbor_id"), "cosine", "rank")
+    return _neighbors(
+        candidates, query=query_id_col, neighbor=id_col, score="cosine", ascending=False, k=k
     )
 
 
@@ -381,6 +481,27 @@ def train_ivf_centroids(
     return spark.createDataFrame(rows, f"{id_col} long, {vec_col} array<float>")
 
 
+def _sign_bits(vectors, Rm: np.ndarray) -> np.ndarray:
+    """(rows, planes) hyperplane sign bits: ``round(v·r, 6) >= 0``.
+
+    The projection accumulates LEFT-ASSOCIATED over dimensions
+    (vectorized across rows/planes, ordered across dims — IEEE addition
+    is not associative, so a matmul would flip last-ulp signs), which is
+    what keeps every bit equal to the DuckDB oracle's. A vector whose
+    length is not the hyperplanes' ``dim`` raises ``ValueError``: a
+    longer one would band on its first ``dim`` elements only.
+    """
+    dim = Rm.shape[1]
+    bad = next((len(v) for v in vectors if len(v) != dim), None)
+    if bad is not None:
+        raise ValueError(f"vector length {bad} != hyperplane dim {dim}")
+    V = np.array(list(vectors), dtype=np.float64)
+    acc = np.zeros((len(V), Rm.shape[0]))
+    for i in range(dim):
+        acc += V[:, i, None] * Rm[None, :, i]
+    return np.round(acc, 6) >= 0
+
+
 def _band_signatures(
     df: DataFrame,
     R: list[list[float]],
@@ -390,33 +511,21 @@ def _band_signatures(
     vec_col: str,
 ) -> DataFrame:
     """(id, band, sig) hyperplane band signatures via a vectorized Arrow
-    kernel.
+    kernel over :func:`_sign_bits`.
 
     The expression form (one 64-term codegen'd sum per plane) exceeds
     janino's 64 KB method limit at 32 planes, so Spark silently falls
     back to interpreted evaluation — measured ~10× slower than this
-    kernel. Bit-compatibility with the DuckDB oracle is preserved by
-    accumulating the projection LEFT-ASSOCIATED over dimensions
-    (vectorized across rows/planes, ordered across dims — IEEE addition
-    is not associative, so a matmul would flip last-ulp signs) and
-    applying the same round-to-6dp-then-sign convention.
+    kernel.
     """
-    import numpy as np
-    import pandas as pd
-
     Rm = np.asarray(R, dtype=np.float64)  # (planes, dim)
-    planes = Rm.shape[0]
-    rows_per = planes // bands
+    rows_per = Rm.shape[0] // bands
 
     def sig(batches):
         for pdf in batches:
             if not len(pdf):
                 continue
-            V = np.array(list(pdf[vec_col]), dtype=np.float64)
-            acc = np.zeros((len(V), planes))
-            for i in range(Rm.shape[1]):  # left-associated fold over dims
-                acc += V[:, i, None] * Rm[None, :, i]
-            bits = np.round(acc, 6) >= 0  # (rows, planes)
+            bits = _sign_bits(pdf[vec_col], Rm)
             ids, bnd, sigs = [], [], []
             for b in range(bands):
                 chunk = bits[:, b * rows_per : (b + 1) * rows_per]
@@ -459,44 +568,24 @@ def cosine_topk_lsh(
     reproduces every bit. May return fewer than ``k`` neighbors — the
     recall tradeoff is the point; brute force is the ground truth.
     """
-    from sales_data_etl_pipeline_spark.operators.dedup import (
-        FINITE_VEC,
-        hyperplane_signs,
-    )
-
-    rows_per = planes // bands
     R = hyperplane_signs(planes, dim)
-
-    def band_sig(df: DataFrame, out_id: str) -> DataFrame:
-        return _band_signatures(
-            df, R, bands, out_id=out_id, vec_col=vec_col
-        )
-
-    # zero-norm: cosine undefined; non-finite/NULL-element: dead by the
-    # module contract (Spark compares NaN > 0 as TRUE, so the norm
-    # filter alone would band a NaN vector)
-    live = F.expr(FINITE_VEC.format(v=vec_col)) & (F.expr(_norm(vec_col)) > 0)
-    c_live = corpus.filter(live)
-    q_live = queries.filter(live).select(
+    c_live = corpus.filter(_live(vec_col))
+    q_live = queries.filter(_live(vec_col)).select(
         F.col(id_col).alias(query_id_col), F.col(vec_col)
     )
     candidates = (
-        band_sig(c_live, id_col)
-        .join(F.broadcast(band_sig(q_live, query_id_col)), ["band", "sig"])
+        _band_signatures(c_live, R, bands, out_id=id_col, vec_col=vec_col)
+        .join(
+            F.broadcast(
+                _band_signatures(q_live, R, bands, out_id=query_id_col, vec_col=vec_col)
+            ),
+            ["band", "sig"],
+        )
         .filter(F.col(id_col) != F.col(query_id_col))
         .select(
             F.col(query_id_col).alias("_qid"), F.col(id_col).alias("_cid")
         )
         .distinct()
-    )
-    dot = (
-        "aggregate(zip_with(transform(c.{v}, x -> cast(x as double)),"
-        " transform(q.{v}, x -> cast(x as double)), (x, y) -> x * y),"
-        " 0D, (acc, x) -> acc + x)"
-    ).format(v=vec_col)
-    norm = (
-        "sqrt(aggregate(transform({side}.{v}, x -> cast(x as double)),"
-        " 0D, (acc, x) -> acc + x * x))"
     )
     scored = (
         candidates.join(
@@ -506,28 +595,16 @@ def cosine_topk_lsh(
             F.broadcast(q_live.alias("q")),
             F.col("_qid") == F.col(f"q.{query_id_col}"),
         )
-        .withColumn(
-            "cosine",
-            F.round(
-                F.expr(dot)
-                / (
-                    F.expr(norm.format(side="c", v=vec_col))
-                    * F.expr(norm.format(side="q", v=vec_col))
-                ),
-                6,
-            ),
-        )
+        .withColumn("cosine", _cosine(f"c.{vec_col}", f"q.{vec_col}"))
     )
-    w = Window.partitionBy("_qid").orderBy(F.desc("cosine"), F.asc("_cid"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(
-            F.col("_qid").alias(query_id_col),
-            F.col("_cid").alias("neighbor_id"),
-            "cosine",
-            "rank",
-        )
+    return _neighbors(
+        scored,
+        query="_qid",
+        neighbor="_cid",
+        score="cosine",
+        ascending=False,
+        k=k,
+        query_as=query_id_col,
     )
 
 
@@ -538,29 +615,19 @@ def _sig_words(
     out_id: str,
     vec_col: str,
 ) -> DataFrame:
-    """(id, word): hyperplane sign bits packed into ONE int64 — bit i
-    is plane i's sign — via the same left-associated dim fold +
-    round-to-6dp sign convention as :func:`_band_signatures`, so the
-    DuckDB twin reproduces every bit. ``len(R)`` must be ≤ 60: the twin
-    builds the word as a sum of ``2^i`` BIGINT literals, which must
-    stay clear of the sign bit.
+    """(id, word): hyperplane sign bits (:func:`_sign_bits`) packed into
+    ONE int64 — bit i is plane i's sign. ``len(R)`` must be ≤ 60: the
+    DuckDB twin builds the word as a sum of ``2^i`` BIGINT literals,
+    which must stay clear of the sign bit.
     """
-    import numpy as np
-    import pandas as pd
-
     Rm = np.asarray(R, dtype=np.float64)  # (planes, dim)
-    planes = Rm.shape[0]
-    weights = 1 << np.arange(planes, dtype=np.int64)
+    weights = 1 << np.arange(Rm.shape[0], dtype=np.int64)
 
     def sig(batches):
         for pdf in batches:
             if not len(pdf):
                 continue
-            V = np.array(list(pdf[vec_col]), dtype=np.float64)
-            acc = np.zeros((len(V), planes))
-            for i in range(Rm.shape[1]):  # left-associated fold over dims
-                acc += V[:, i, None] * Rm[None, :, i]
-            bits = (np.round(acc, 6) >= 0).astype(np.int64)
+            bits = _sign_bits(pdf[vec_col], Rm).astype(np.int64)
             yield pd.DataFrame(
                 {
                     out_id: pdf[out_id].to_numpy(),
@@ -620,22 +687,16 @@ def hamming_topk(
     neighbor could collide with a query id by accident: pass
     ``exclude_self=False`` there (ADVICE r10).
     """
-    from sales_data_etl_pipeline_spark.operators.dedup import (
-        FINITE_VEC,
-        hyperplane_signs,
-    )
-
     if planes % bands or planes > 60:
         raise ValueError("planes must be a multiple of bands and ≤ 60")
     bits_per = planes // bands
     mask = (1 << bits_per) - 1
     R = hyperplane_signs(planes, dim)
-    live = F.expr(FINITE_VEC.format(v=vec_col)) & (F.expr(_norm(vec_col)) > 0)
     c_words = _sig_words(
-        corpus.filter(live), R, out_id=id_col, vec_col=vec_col
+        corpus.filter(_live(vec_col)), R, out_id=id_col, vec_col=vec_col
     )
     q_words = _sig_words(
-        queries.filter(live).select(
+        queries.filter(_live(vec_col)).select(
             F.col(id_col).alias(query_id_col), F.col(vec_col)
         ),
         R,
@@ -664,18 +725,79 @@ def hamming_topk(
     scored = cand.withColumn(
         "hamming", F.bit_count(F.col("_qw").bitwiseXOR(F.col("_cw")))
     )
-    w = Window.partitionBy(query_id_col).orderBy(
-        F.asc("hamming"), F.asc(id_col)
+    return _neighbors(
+        scored, query=query_id_col, neighbor=id_col, score="hamming", ascending=True, k=k
     )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(
-            query_id_col,
-            F.col(id_col).alias("neighbor_id"),
-            "hamming",
-            "rank",
+
+
+def _on_grid(
+    df: DataFrame, id_col: str, vec_col: str, out_id: str, out_vec: str
+) -> DataFrame:
+    """(out_id, out_vec): the finite vectors of ``df`` on the PQ grid."""
+    return df.filter(_finite(vec_col)).select(
+        F.col(id_col).alias(out_id), F.expr(_PQ_GRID.format(v=vec_col)).alias(out_vec)
+    )
+
+
+def _probe_lists(
+    qg: DataFrame, cg: DataFrame, *, query_id_col: str, dim: int, n_probe: int
+) -> DataFrame:
+    """IVF probe ranking on the grid: each grid query (``_qv``) keeps its
+    ``n_probe`` nearest coarse lists (``list_id``, ``_cv``) by exact
+    full-vector int64 L2, ties → smallest list id."""
+    d2 = F.expr(_PQ_BLOCK_D2.format(a="_qv", b="_cv", off=1, bs=dim))
+    return _topk(
+        qg.crossJoin(F.broadcast(cg)).withColumn("_d2", d2),
+        [query_id_col],
+        [F.asc("_d2"), F.asc("list_id")],
+        n_probe,
+        "_rn",
+    )
+
+
+def _code_rows(codes: DataFrame, id_col: str, *carry: str) -> DataFrame:
+    """(_vid, *carry, m, code): one row per PQ block of each encoded
+    vector."""
+    return codes.select(
+        F.col(id_col).alias("_vid"),
+        *carry,
+        F.posexplode(F.split("codes", ",")).alias("m", "_c"),
+    ).select("_vid", *carry, "m", F.col("_c").cast("long").alias("code"))
+
+
+def _block_lut(
+    pairs: DataFrame, cols: list[str], *, a: str, b: str, n_blocks: int, bs: int
+) -> DataFrame:
+    """Per-block distance lookup table: every (query, codeword) row of
+    ``pairs`` explodes into one row per block ``m`` carrying the exact
+    int64 block distance ``d2p`` between grid arrays ``a`` and ``b``.
+    ``cols`` names the output columns in order, ``m`` and ``d2p``
+    included."""
+    bd = F.explode(
+        F.array(
+            *[
+                F.struct(
+                    F.lit(m).alias("m"),
+                    F.expr(
+                        _PQ_BLOCK_D2.format(a=a, b=b, off=m * bs + 1, bs=bs)
+                    ).alias("d2p"),
+                )
+                for m in range(n_blocks)
+            ]
         )
+    ).alias("bd")
+    made = ("m", "d2p")
+    return pairs.select(*[c for c in cols if c not in made], bd).select(
+        *[F.col(f"bd.{c}").alias(c) if c in made else c for c in cols]
+    )
+
+
+def _adc_topk(joined: DataFrame, query_id_col: str, k: int) -> DataFrame:
+    """Sum each (query, vector)'s block distances into ``d2_adc`` and
+    rank: smallest first, ties → smallest corpus id."""
+    scored = joined.groupBy(query_id_col, "_vid").agg(F.sum("d2p").alias("d2_adc"))
+    return _neighbors(
+        scored, query=query_id_col, neighbor="_vid", score="d2_adc", ascending=True, k=k
     )
 
 
@@ -716,12 +838,6 @@ def ivfpq_residual_topk(
     sum is map-side combinable. Output: (query_id, neighbor_id,
     d2_adc, rank), ties → smallest corpus id.
     """
-    from sales_data_etl_pipeline_spark.operators.dedup import FINITE_VEC
-    from sales_data_etl_pipeline_spark.operators.embeddings import (
-        pq_encode_residual,
-        residual_codewords,
-    )
-
     c_ids, C, r_ids, RC = residual_codewords(
         coarse,
         residual_codebook,
@@ -735,9 +851,7 @@ def ivfpq_residual_topk(
     if C is None or RC is None:
         return spark.createDataFrame([], out_schema)
     dim = C.shape[1]
-    if dim % n_blocks:
-        raise ValueError(f"dim {dim} not divisible by n_blocks {n_blocks}")
-    bs = dim // n_blocks
+    bs = _block_size(dim, n_blocks)
     codes = pq_encode_residual(
         corpus,
         coarse,
@@ -747,11 +861,6 @@ def ivfpq_residual_topk(
         vec_col=vec_col,
         centroid_id_col=centroid_id_col,
     )
-    code_rows = codes.select(
-        F.col(id_col).alias("_vid"),
-        "list_id",
-        F.posexplode(F.split("codes", ",")).alias("m", "_c"),
-    ).select("_vid", "list_id", "m", F.col("_c").cast("long").alias("code"))
     # K coarse-grid rows + K_res integer codewords as tiny DataFrames
     cg = spark.createDataFrame(
         [(int(i), [int(x) for x in row]) for i, row in zip(c_ids, C)],
@@ -761,79 +870,34 @@ def ivfpq_residual_topk(
         [(int(i), [int(x) for x in row]) for i, row in zip(r_ids, RC)],
         "code long, _rv array<bigint>",
     )
-    qg = queries.filter(F.expr(FINITE_VEC.format(v=vec_col))).select(
-        F.col(id_col).alias(query_id_col),
-        F.expr(_PQ_GRID.format(v=vec_col)).alias("_qv"),
+    # probe the n_probe nearest lists, and carry the list-dependent
+    # integer query residual forward
+    probes = _probe_lists(
+        _on_grid(queries, id_col, vec_col, query_id_col, "_qv"),
+        cg,
+        query_id_col=query_id_col,
+        dim=dim,
+        n_probe=n_probe,
+    ).select(
+        query_id_col,
+        "list_id",
+        F.expr("zip_with(_qv, _cv, (x, y) -> x - y)").alias("_qr"),
     )
-    wp = Window.partitionBy(query_id_col).orderBy(
-        F.asc("_d2"), F.asc("list_id")
-    )
-    # probe the n_probe nearest lists by exact full-vector grid L2,
-    # and carry the list-dependent integer query residual forward
-    probes = (
-        qg.crossJoin(F.broadcast(cg))
-        .withColumn(
-            "_d2",
-            F.expr(_PQ_BLOCK_D2.format(a="_qv", b="_cv", off=1, bs=dim)),
-        )
-        .withColumn("_rn", F.row_number().over(wp))
-        .filter(F.col("_rn") <= n_probe)
-        .select(
-            query_id_col,
-            "list_id",
-            F.expr("zip_with(_qv, _cv, (x, y) -> x - y)").alias("_qr"),
-        )
-    )
-    lut = (
-        probes.crossJoin(F.broadcast(rc))
-        .select(
-            query_id_col,
-            "list_id",
-            "code",
-            F.explode(
-                F.array(
-                    *[
-                        F.struct(
-                            F.lit(m).alias("m"),
-                            F.expr(
-                                _PQ_BLOCK_D2.format(
-                                    a="_qr", b="_rv", off=m * bs + 1, bs=bs
-                                )
-                            ).alias("d2p"),
-                        )
-                        for m in range(n_blocks)
-                    ]
-                )
-            ).alias("bd"),
-        )
-        .select(
-            query_id_col,
-            "list_id",
-            F.col("bd.m").alias("m"),
-            "code",
-            F.col("bd.d2p").alias("d2p"),
-        )
+    lut = _block_lut(
+        probes.crossJoin(F.broadcast(rc)),
+        [query_id_col, "list_id", "m", "code", "d2p"],
+        a="_qr",
+        b="_rv",
+        n_blocks=n_blocks,
+        bs=bs,
     )
     # IVF restriction: a code row is scanned only by queries probing
     # its list — the join on list_id IS the probe; no broadcast hint on
     # the LUT join (AQE decides; see pq_adc_topk's sizing note)
-    scored = (
-        code_rows.join(lut, ["list_id", "m", "code"])
-        .groupBy(query_id_col, "_vid")
-        .agg(F.sum("d2p").alias("d2_adc"))
-    )
-    w = Window.partitionBy(query_id_col).orderBy(
-        F.asc("d2_adc"), F.asc("_vid")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(
-            query_id_col,
-            F.col("_vid").alias("neighbor_id"),
-            "d2_adc",
-            "rank",
-        )
+    return _adc_topk(
+        _code_rows(codes, id_col, "list_id").join(lut, ["list_id", "m", "code"]),
+        query_id_col,
+        k,
     )
 
 
@@ -874,16 +938,10 @@ def cosine_range_join(
     (cosine undefined — the module contract). Output: (left_id,
     right_id, cosine) with cosine rounded to 6 dp.
     """
-    from sales_data_etl_pipeline_spark.operators.dedup import (
-        FINITE_VEC,
-        hyperplane_signs,
-    )
-
-    live = F.expr(FINITE_VEC.format(v=vec_col)) & (F.expr(_norm(vec_col)) > 0)
-    l_live = left.filter(live).select(
+    l_live = left.filter(_live(vec_col)).select(
         F.col(id_col).alias("left_id"), F.col(vec_col)
     )
-    r_live = right.filter(live).select(
+    r_live = right.filter(_live(vec_col)).select(
         F.col(id_col).alias("right_id"), F.col(vec_col)
     )
     R = hyperplane_signs(planes, dim)
@@ -897,18 +955,6 @@ def cosine_range_join(
         .select("left_id", "right_id")
         .distinct()
     )
-    dot = (
-        "aggregate(zip_with(transform(l.{v}, x -> cast(x as double)),"
-        " transform(r.{v}, x -> cast(x as double)), (x, y) -> x * y),"
-        " 0D, (acc, x) -> acc + x)"
-    ).format(v=vec_col)
-    norm = (
-        "sqrt(aggregate(transform({side}.{v}, x -> cast(x as double)),"
-        " 0D, (acc, x) -> acc + x * x))"
-    )
-    from sales_data_etl_pipeline_spark.operators.dedup import shuffle_width
-
-    width = shuffle_width(left)
     return (
         candidates.join(l_live.alias("l"), "left_id")
         # pin the verify stage's width: the exact-cosine fold below is
@@ -918,19 +964,9 @@ def cosine_range_join(
         # count (REPARTITION_BY_NUM) is AQE-coalesce-proof, and because
         # it hash-partitions on the SECOND join's key the join reuses
         # the exchange — no extra shuffle, just a pinned width.
-        .repartition(width, F.col("right_id"))
+        .repartition(shuffle_width(left), F.col("right_id"))
         .join(r_live.alias("r"), "right_id")
-        .withColumn(
-            "cosine",
-            F.round(
-                F.expr(dot)
-                / (
-                    F.expr(norm.format(side="l", v=vec_col))
-                    * F.expr(norm.format(side="r", v=vec_col))
-                ),
-                6,
-            ),
-        )
+        .withColumn("cosine", _cosine(f"l.{vec_col}", f"r.{vec_col}"))
         .filter(F.col("cosine") >= threshold)
         .select("left_id", "right_id", "cosine")
     )
@@ -958,14 +994,8 @@ def cosine_range_topk(
     Candidates and the exact-cosine verify are exactly
     :func:`cosine_range_join` (banded hyperplane equi-join on (band,
     sig), threshold filter, 6dp-rounded cosine). Ranking is the salted
-    two-phase top-k (same exactness argument as
-    ``corpus.domain_cap``): phase 1 ranks within (left_id, salt) and
-    keeps ≤ k per salted group — parallel even for a one-hub result —
-    phase 2 re-ranks the ≤ salt_buckets·k survivors per left. Exact:
-    every global top-k row is in its salt group's top-k. Reducer width
-    is bounded by |matches(left)|/salt_buckets then salt_buckets·k —
-    a naive single row_number window would funnel every hub match
-    through one reducer.
+    two-phase top-k of :func:`_topk_per_left` (same exactness argument
+    as ``corpus.domain_cap``).
 
     Order: cosine DESC, right_id ASC (deterministic ties). Output:
     (left_id, right_id, cosine, rank), rank 1..k.
@@ -987,33 +1017,22 @@ def _topk_per_left(
     pairs: DataFrame, *, k: int, salt_buckets: int
 ) -> DataFrame:
     """Salted two-phase top-k over (left_id, right_id, cosine) pairs:
-    phase 1 ranks within (left_id, salt) keeping ≤ k, phase 2 re-ranks
-    the ≤ salt_buckets·k survivors per left. Exact (every global top-k
-    row is in its salt group's top-k); reducer width bounded by
-    |matches(left)|/salt_buckets then salt_buckets·k."""
+    phase 1 ranks within (left_id, salt) keeping ≤ k — parallel even
+    for a one-hub result — phase 2 re-ranks the ≤ salt_buckets·k
+    survivors per left. Exact (every global top-k row is in its salt
+    group's top-k); reducer width bounded by |matches(left)|/salt_buckets
+    then salt_buckets·k, where a single window would funnel every hub
+    match through one reducer."""
+    order = [F.desc("cosine"), F.asc("right_id")]
     salted = pairs.withColumn(
         "_salt", F.pmod(F.xxhash64("right_id"), F.lit(salt_buckets))
     )
-    w1 = Window.partitionBy("left_id", "_salt").orderBy(
-        F.desc("cosine"), F.asc("right_id")
-    )
-    phase1 = (
-        salted.withColumn("_r1", F.row_number().over(w1))
-        .filter(F.col("_r1") <= k)
-        .drop("_r1", "_salt")
-    )
-    w2 = Window.partitionBy("left_id").orderBy(
-        F.desc("cosine"), F.asc("right_id")
-    )
-    return (
-        phase1.withColumn("rank", F.row_number().over(w2))
-        .filter(F.col("rank") <= k)
-        .select(
-            "left_id",
-            "right_id",
-            "cosine",
-            F.col("rank").cast("long").alias("rank"),
-        )
+    phase1 = _topk(salted, ["left_id", "_salt"], order, k, "_r1").drop("_r1", "_salt")
+    return _topk(phase1, ["left_id"], order, k).select(
+        "left_id",
+        "right_id",
+        "cosine",
+        F.col("rank").cast("long").alias("rank"),
     )
 
 
@@ -1099,52 +1118,37 @@ def kmeans_assign(
     against all centroids in ONE BLAS matmul and emits (vec_id,
     centroid_id, cosine_q6) — cosine pre-rounded to 6dp and quantized
     to an exact integer so any downstream aggregate sums bigints,
-    order-free across engines. Zero-norm corpus vectors are excluded
-    (cosine undefined — the fuzz-pinned module contract); zero-norm
+    order-free across engines. Dead corpus vectors are excluded
+    (cosine undefined — the fuzz-pinned module contract); dead
     centroids can never win (scored -inf).
 
     Per-row work only — no shuffle at all in the assignment itself; at
     100 TB this is the embarrassingly parallel half of Lloyd's, and the
     re-centering half is a plain keyed mean the caller composes.
     """
-    import numpy as np
-    import pandas as pd
-
-    c_rows = sorted(
-        centroids.select(centroid_id_col, vec_col).collect(),
-        key=lambda r: r[0],
-    )
+    c_ids, c_vecs = _collect(centroids, centroid_id_col, vec_col)
     out_schema = f"{id_col} long, {centroid_id_col} long, cosine_q6 long"
-    if not c_rows:
+    if not len(c_ids):
         # no centroids → no assignment (empty partition, not an error)
         return corpus.sparkSession.createDataFrame([], out_schema)
-    c_ids = np.array([r[0] for r in c_rows], dtype=np.int64)
-    C = np.array([r[1] for r in c_rows], dtype=np.float64)
-    C[~np.isfinite(C).all(axis=1)] = 0.0  # dead, like zero-norm
-    c_norm = np.linalg.norm(C, axis=1, keepdims=True)
-    Cn = np.divide(C, c_norm, out=np.zeros_like(C), where=c_norm > 0)
-    dead_c = (c_norm == 0).ravel()
+    Cn, c_live = _unit_rows(c_vecs)
 
     def assign(batches):
         for pdf in batches:
             if not len(pdf):
                 continue
             ids = pdf[id_col].to_numpy(dtype=np.int64)
-            V = np.array(list(pdf[vec_col]), dtype=np.float64)
-            V[~np.isfinite(V).all(axis=1)] = 0.0  # dead, like zero-norm
-            v_norm = np.linalg.norm(V, axis=1, keepdims=True)
-            live = (v_norm > 0).ravel()
+            Vn, live = _unit_rows(pdf[vec_col])
             if not live.any():
                 continue
-            Vn = np.divide(V, v_norm, out=np.zeros_like(V), where=v_norm > 0)
             S = np.round(Vn[live] @ Cn.T, 6)
-            S[:, dead_c] = -np.inf
+            S[:, ~c_live] = -np.inf
             # argmax over columns sorted by centroid id ascending: the
             # first max IS the smallest-id tiebreak
             best = S.argmax(axis=1)
             best_s = S[np.arange(len(best)), best]
             # if EVERY centroid is dead, best_s is -inf and the row has
-            # no valid assignment — emit nothing (mirrors the dead_q
+            # no valid assignment — emit nothing (mirrors the dead-query
             # handling in _pandas_scored; the oracle's dead-centroid
             # filter produces no rows for this degenerate input either)
             ok = np.isfinite(best_s)
@@ -1161,20 +1165,6 @@ def kmeans_assign(
             )
 
     return corpus.select(id_col, vec_col).mapInPandas(assign, out_schema)
-
-
-#: Integer PQ grid expression (Spark SQL): quantize a float vector onto
-#: the pq_encode grid — clamp(round(x·16), ±127) per element, BIGINT.
-_PQ_GRID = (
-    "transform({v}, x -> least(greatest("
-    "cast(floor(cast(x as double) * 16 + 0.5) as bigint), -127L), 127L))"
-)
-
-#: Exact int64 squared-L2 over one PQ block (1-based slice offsets).
-_PQ_BLOCK_D2 = (
-    "aggregate(zip_with(slice({a}, {off}, {bs}), slice({b}, {off}, {bs}),"
-    " (x, y) -> (x - y) * (x - y)), 0L, (acc, x) -> acc + x)"
-)
 
 
 def pq_adc_topk(
@@ -1222,9 +1212,6 @@ def pq_adc_topk(
     the ADC scan touches only that fraction of the code table (the
     full IVF-PQ layout; see the ivf-pq gate for the composition).
     """
-    from sales_data_etl_pipeline_spark.operators.dedup import FINITE_VEC
-    from sales_data_etl_pipeline_spark.operators.embeddings import pq_encode
-
     # Derive the true dimension FROM the codebook (one tiny action — a
     # codebook is small by definition; pq_encode collects it outright).
     # Trusting a caller-supplied dim is silently wrong: slice() past the
@@ -1232,7 +1219,7 @@ def pq_adc_topk(
     # pq_encode blocks on the real dim — mismatched LUTs, wrong ranks,
     # no error. A supplied dim is now only a cross-check.
     span = (
-        codebook.filter(F.expr(FINITE_VEC.format(v=vec_col)))
+        codebook.filter(_finite(vec_col))
         .agg(
             F.min(F.size(vec_col)).alias("lo"),
             F.max(F.size(vec_col)).alias("hi"),
@@ -1262,20 +1249,17 @@ def pq_adc_topk(
             ]
         )
         return corpus.sparkSession.createDataFrame([], out_schema)
-    else:
-        if span["lo"] != span["hi"]:
-            raise ValueError(
-                f"pq_adc_topk: ragged codebook dims {span['lo']}..{span['hi']}"
-            )
-        if dim is not None and dim != span["lo"]:
-            raise ValueError(
-                f"pq_adc_topk: dim={dim} but codebook vectors are "
-                f"{span['lo']}-dimensional"
-            )
-        dim = int(span["lo"])
-    if dim % n_blocks:
-        raise ValueError(f"dim {dim} not divisible by n_blocks {n_blocks}")
-    bs = dim // n_blocks
+    if span["lo"] != span["hi"]:
+        raise ValueError(
+            f"pq_adc_topk: ragged codebook dims {span['lo']}..{span['hi']}"
+        )
+    if dim is not None and dim != span["lo"]:
+        raise ValueError(
+            f"pq_adc_topk: dim={dim} but codebook vectors are "
+            f"{span['lo']}-dimensional"
+        )
+    dim = int(span["lo"])
+    bs = _block_size(dim, n_blocks)
     codes = pq_encode(
         corpus,
         codebook,
@@ -1284,11 +1268,7 @@ def pq_adc_topk(
         vec_col=vec_col,
         centroid_id_col=centroid_id_col,
     )
-    code_rows = codes.select(
-        F.col(id_col).alias("_vid"),
-        F.posexplode(F.split("codes", ",")).alias("m", "_c"),
-    ).select("_vid", "m", F.col("_c").cast("long").alias("code"))
-    q_grid = queries.filter(F.expr(FINITE_VEC.format(v=vec_col))).select(
+    q_grid = queries.filter(_finite(vec_col)).select(
         F.col(id_col).alias(query_id_col),
         # a wrong-dim query would score every corpus vector at 0 via
         # empty slices — error loudly instead (executor-side guard)
@@ -1307,32 +1287,13 @@ def pq_adc_topk(
         )
         .alias("_qv"),
     )
-    c_grid = codebook.filter(F.expr(FINITE_VEC.format(v=vec_col))).select(
-        F.col(centroid_id_col).alias("code"),
-        F.expr(_PQ_GRID.format(v=vec_col)).alias("_cv"),
-    )
-    lut = (
-        q_grid.crossJoin(F.broadcast(c_grid))
-        .select(
-            query_id_col,
-            "code",
-            F.explode(
-                F.array(
-                    *[
-                        F.struct(
-                            F.lit(m).alias("m"),
-                            F.expr(
-                                _PQ_BLOCK_D2.format(
-                                    a="_qv", b="_cv", off=m * bs + 1, bs=bs
-                                )
-                            ).alias("d2p"),
-                        )
-                        for m in range(n_blocks)
-                    ]
-                )
-            ).alias("bd"),
-        )
-        .select(query_id_col, "code", F.col("bd.m").alias("m"), F.col("bd.d2p").alias("d2p"))
+    lut = _block_lut(
+        q_grid.crossJoin(F.broadcast(_on_grid(codebook, centroid_id_col, vec_col, "code", "_cv"))),
+        [query_id_col, "code", "m", "d2p"],
+        a="_qv",
+        b="_cv",
+        n_blocks=n_blocks,
+        bs=bs,
     )
     # NO broadcast hint on the LUT join: the LUT is |Q|·K·M rows —
     # bounded in deployment (K≈256 codewords, batched queries) where
@@ -1340,33 +1301,13 @@ def pq_adc_topk(
     # outright when a fixture or caller scales |Q|·K (measured: the
     # 100× soak's 540M-row LUT). Un-hinted, the plan degrades to a
     # shuffle hash join on the (block, code) key.
+    code_rows = _code_rows(codes, id_col)
     if candidates is not None:
-        cand = candidates.select(
-            query_id_col, F.col(id_col).alias("_vid")
-        )
-        scored = (
-            code_rows.join(cand, "_vid")
-            .join(lut, [query_id_col, "m", "code"])
-            .groupBy(query_id_col, "_vid")
-            .agg(F.sum("d2p").alias("d2_adc"))
-        )
+        cand = candidates.select(query_id_col, F.col(id_col).alias("_vid"))
+        joined = code_rows.join(cand, "_vid").join(lut, [query_id_col, "m", "code"])
     else:
-        scored = (
-            code_rows.join(lut, ["m", "code"])
-            .groupBy(query_id_col, "_vid")
-            .agg(F.sum("d2p").alias("d2_adc"))
-        )
-    w = Window.partitionBy(query_id_col).orderBy(F.asc("d2_adc"), F.asc("_vid"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(
-            query_id_col,
-            F.col("_vid").alias("neighbor_id"),
-            "d2_adc",
-            "rank",
-        )
-    )
+        joined = code_rows.join(lut, ["m", "code"])
+    return _adc_topk(joined, query_id_col, k)
 
 
 def kmeans_lloyd_int(
@@ -1420,27 +1361,14 @@ def kmeans_lloyd_int(
     )
 
 
-#: Exact int64 squared L2 between a grid vector and a centroid vector.
-_GRID_D2 = (
-    "aggregate(zip_with(_gv, _cv, (x, y) -> (x - y) * (x - y)),"
-    " 0L, (acc, x) -> acc + x)"
-)
-
-
 def _grid_vectors(
     corpus: DataFrame, *, id_col: str, vec_col: str
 ) -> DataFrame:
     """(_vid, _gv): finite vectors quantized onto the module int grid,
     lineage-cut because every Lloyd iteration (and the final
     assignment) rescans them."""
-    from sales_data_etl_pipeline_spark.operators.dedup import FINITE_VEC
-
     return ckpt.checkpoint(
-        corpus.filter(F.expr(FINITE_VEC.format(v=vec_col)))
-        .select(
-            F.col(id_col).alias("_vid"),
-            F.expr(_PQ_GRID.format(v=vec_col)).alias("_gv"),
-        ),
+        _on_grid(corpus, id_col, vec_col, "_vid", "_gv"),
         eager=False,  # reused every iteration
     )
 
@@ -1485,11 +1413,6 @@ def _lloyd_train_grid(
     cents: dict[int, list[int]] = {
         i: list(r["_gv"]) for i, r in enumerate(seed_rows)
     }
-
-    def _trunc_div(s: int, n: int) -> int:
-        q = abs(s) // n
-        return q if s >= 0 else -q
-
     for _ in range(iterations):
         sums = (
             _assign_grid(cents, g)
@@ -1573,14 +1496,10 @@ def semantic_dedup(
         "_cid",
         F.col("_n2").alias("_b2"),
     )
-    dot = (
-        "aggregate(zip_with(_agv, _bgv, (x, y) -> x * y), 0L,"
-        " (acc, x) -> acc + x)"
-    )
     dropped = (
         a.join(b, "_cid")
         .filter(F.col("_aid") < F.col("_bid"))
-        .withColumn("_dot", F.expr(dot))
+        .withColumn("_dot", F.expr(_INT_DOT.format(a="_agv", b="_bgv")))
         .filter(
             (F.col("_a2") > 0)
             & (F.col("_b2") > 0)
@@ -1696,13 +1615,7 @@ def pca_power_int(
         vlit = F.array([F.lit(int(x)) for x in v])
         dotted = (
             g.withColumn("_v", vlit)
-            .select(
-                F.expr(
-                    "aggregate(zip_with(_gv, _v, (x, y) -> x * y),"
-                    " 0L, (acc, x) -> acc + x)"
-                ).alias("_u"),
-                "_gv",
-            )
+            .select(F.expr(_INT_DOT.format(a="_gv", b="_v")).alias("_u"), "_gv")
         )
         w_rows = (
             dotted.select("_u", F.posexplode("_gv").alias("_j", "_x"))
@@ -1761,15 +1674,6 @@ def hamming_rerank_topk(
         query_id_col=query_id_col,
         exclude_self=exclude_self,
     ).select(query_id_col, F.col("neighbor_id").alias("_cid"))
-    dot = (
-        "aggregate(zip_with(transform(c.{v}, x -> cast(x as double)),"
-        " transform(q.{v}, x -> cast(x as double)), (x, y) -> x * y),"
-        " 0D, (acc, x) -> acc + x)"
-    ).format(v=vec_col)
-    norm = (
-        "sqrt(aggregate(transform({side}.{v}, x -> cast(x as double)),"
-        " 0D, (acc, x) -> acc + x * x))"
-    )
     q_side = queries.select(
         F.col(id_col).alias(query_id_col), F.col(vec_col)
     )
@@ -1781,26 +1685,8 @@ def hamming_rerank_topk(
             F.broadcast(q_side.alias("q")),
             query_id_col,
         )
-        .withColumn(
-            "cosine",
-            F.round(
-                F.expr(dot)
-                / (
-                    F.expr(norm.format(side="c", v=vec_col))
-                    * F.expr(norm.format(side="q", v=vec_col))
-                ),
-                6,
-            ),
-        )
+        .withColumn("cosine", _cosine(f"c.{vec_col}", f"q.{vec_col}"))
     )
-    w = Window.partitionBy(query_id_col).orderBy(F.desc("cosine"), F.asc("_cid"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(
-            query_id_col,
-            F.col("_cid").alias("neighbor_id"),
-            "cosine",
-            "rank",
-        )
+    return _neighbors(
+        scored, query=query_id_col, neighbor="_cid", score="cosine", ascending=False, k=k
     )

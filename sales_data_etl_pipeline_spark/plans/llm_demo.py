@@ -1030,7 +1030,7 @@ def _emb_lsh_oracle(
     """DuckDB twin of ``dedup.embedding_lsh_pairs`` — same md5-derived
     ±1 hyperplanes (driver-generated literals), same fold + 6dp-round
     sign convention, same banding."""
-    R = dedup.hyperplane_signs(planes, dim)
+    R = similarity.hyperplane_signs(planes, dim)
     rows = planes // bands
 
     def bit(b: int) -> str:
@@ -2346,7 +2346,7 @@ QUERIES["similarity_topk_lsh"] = similarity_topk_lsh
 def _ann_lsh_oracle(planes: int = 32, bands: int = 8, dim: int = 64, k: int = 5) -> str:
     """DuckDB twin of ``similarity.cosine_topk_lsh`` — same hyperplanes,
     fold + 6dp-round sign convention, banding, and re-rank order."""
-    R = dedup.hyperplane_signs(planes, dim)
+    R = similarity.hyperplane_signs(planes, dim)
     rows = planes // bands
 
     def bit(b: int) -> str:
@@ -2462,7 +2462,7 @@ def _range_join_oracle(
     ``extra_plant`` adds a SECOND perturbed copy of every 50th even
     vector (+20000, dim-2 bumped) so the top-k gate exercises
     rank ≥ 2 per left."""
-    R = dedup.hyperplane_signs(planes, dim)
+    R = similarity.hyperplane_signs(planes, dim)
     rows = planes // bands
     band_selects = _hyperplane_band_selects_sql(R, rows, bands, dim)
 
@@ -4393,12 +4393,6 @@ def similarity_topk_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
     code table, never a raw-vector scan. Composes three gated pieces
     (pq_encode coarse + probe ranking + candidate-restricted
     pq_adc_topk); exact int64 arithmetic end-to-end."""
-    from sales_data_etl_pipeline_spark.operators import embeddings as emb_ops
-    from sales_data_etl_pipeline_spark.operators.similarity import (
-        _PQ_BLOCK_D2,
-        _PQ_GRID,
-    )
-
     emb = _emb(spark, sf_dir)
     cents = emb.filter(F.col("vec_id") % 50 == 0).select(
         F.col("vec_id").alias("centroid_id"), "embedding"
@@ -4407,34 +4401,16 @@ def similarity_topk_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
     queries = emb.filter(F.col("vec_id") % 37 == 0).select(
         "vec_id", "embedding"
     )
-    lists = emb_ops.pq_encode(corpus, cents, n_blocks=1).select(
+    lists = _emb_ops.pq_encode(corpus, cents, n_blocks=1).select(
         "vec_id", F.col("codes").cast("long").alias("list_id")
     )
-    finite = dedup.FINITE_VEC.format(v="embedding")
-    qg = queries.filter(F.expr(finite)).select(
-        F.col("vec_id").alias("query_id"),
-        F.expr(_PQ_GRID.format(v="embedding")).alias("_qv"),
-    )
-    cg = cents.filter(F.expr(finite)).select(
-        F.col("centroid_id").alias("list_id"),
-        F.expr(_PQ_GRID.format(v="embedding")).alias("_cv"),
-    )
-    probes = (
-        qg.crossJoin(F.broadcast(cg))
-        .withColumn(
-            "_d2", F.expr(_PQ_BLOCK_D2.format(a="_qv", b="_cv", off=1, bs=64))
-        )
-        .withColumn(
-            "_rn",
-            F.row_number().over(
-                _W.partitionBy("query_id").orderBy(
-                    F.asc("_d2"), F.asc("list_id")
-                )
-            ),
-        )
-        .filter(F.col("_rn") <= 2)
-        .select("query_id", "list_id")
-    )
+    probes = similarity._probe_lists(
+        similarity._on_grid(queries, "vec_id", "embedding", "query_id", "_qv"),
+        similarity._on_grid(cents, "centroid_id", "embedding", "list_id", "_cv"),
+        query_id_col="query_id",
+        dim=64,
+        n_probe=2,
+    ).select("query_id", "list_id")
     cand = probes.join(lists, "list_id").select("query_id", "vec_id")
     return similarity.pq_adc_topk(
         corpus, cents, queries, k=5, candidates=cand
@@ -4985,7 +4961,7 @@ def _knn_graph_oracle(
     hyperplane banding, self-exclusion, per-left top-k (cosine DESC,
     right ASC), and mutual symmetrization over the same planted
     corpus."""
-    R = dedup.hyperplane_signs(planes, dim)
+    R = similarity.hyperplane_signs(planes, dim)
     band_selects = _hyperplane_band_selects_sql(
         R, planes // bands, bands, dim
     )
@@ -6242,7 +6218,7 @@ def _ann_hamming_oracle(
     """DuckDB twin of ``similarity.hamming_topk`` — same hyperplanes,
     fold + 6dp-round sign convention, int64 bit packing, band slices,
     and (hamming, id) rank order."""
-    R = dedup.hyperplane_signs(planes, dim)
+    R = similarity.hyperplane_signs(planes, dim)
     bits_per = planes // bands
     mask = (1 << bits_per) - 1
 

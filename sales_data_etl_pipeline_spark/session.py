@@ -18,7 +18,7 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 #: Environment variables the test/bench harness may set.
 ENV_CPUS = "SPARK_GRAFT_CPUS"
@@ -77,3 +77,13 @@ def get_spark(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def shuffle_width(df: DataFrame) -> int:
+    """The deployment's shuffle-parallelism knob:
+    ``spark.sql.shuffle.partitions``, falling back to
+    ``defaultParallelism`` on non-numeric vendor values ("auto")."""
+    try:
+        return int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+    except (TypeError, ValueError):
+        return df.sparkSession.sparkContext.defaultParallelism

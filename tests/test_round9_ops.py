@@ -461,3 +461,32 @@ def test_domain_cap_equals_single_window_form(spark):
 
     per = Counter(r.source for r in got)
     assert per["hot"] == 7 and all(v <= 7 for v in per.values())
+
+
+def test_prepared_minhash_base_rejects_other_parameters(spark):
+    """A base saved with one (num_hashes, bands, n) and matched with
+    another used to return no rows (its band keys never meet the
+    incoming side's). The parameters are recorded with the base, and a
+    mismatch raises before any job runs."""
+    from sales_data_etl_pipeline_spark.profile import job_group
+
+    base = spark.createDataFrame(
+        [Row(doc_id=i, text=f"spark minhash base doc {i} shared words tail") for i in range(8)]
+    )
+    incoming = base.select((F.col("doc_id") + 100).alias("doc_id"), "text")
+    try:
+        dedup.save_minhash_base(base, "t_mh_params", bands=4)
+        for bad in ({"bands": 8}, {"num_hashes": 32}, {"n": 2}):
+            with job_group(spark, "t_mh_params") as rec:
+                with pytest.raises(ValueError, match="t_mh_params"):
+                    dedup.minhash_lsh_incremental_prepared(
+                        spark, "t_mh_params", incoming, **bad
+                    )
+            assert rec.jobs == [], bad
+        same = dedup.minhash_lsh_incremental_prepared(
+            spark, "t_mh_params", incoming, bands=4, threshold=0.9
+        )
+        assert same.count() == 8
+    finally:
+        for t in ("_shingles", "_per_doc", "_band_sig"):
+            spark.sql(f"DROP TABLE IF EXISTS t_mh_params{t}")

@@ -2,6 +2,7 @@
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from sales_data_etl_pipeline_spark.operators import similarity
@@ -122,3 +123,50 @@ def test_lsh_topk_recall_vs_brute_force(spark):
     # the candidate join broadcasts the query side
     plan = approx._jdf.queryExecution().executedPlan().toString()
     assert "BroadcastHashJoin" in plan and "CartesianProduct" not in plan
+
+
+@pytest.mark.parametrize("dim", [8, 32])
+def test_hyperplane_dim_must_match_vector_length(spark, dim):
+    """The hyperplane sign fold banded only the first ``dim`` elements
+    of a longer vector (no error) and died with an opaque IndexError on
+    a shorter one; either mismatch now raises a ValueError naming both
+    lengths."""
+    rows = [(i, [float((i * 7 + d) % 5 - 2) for d in range(16)]) for i in range(5)]
+    left = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
+    right = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
+    with pytest.raises(Exception, match=f"ValueError: vector length 16 != hyperplane dim {dim}"):
+        similarity.cosine_range_join(left, right, dim=dim).collect()
+
+
+def test_vector_steps_are_spelled_once():
+    """The Spark cosine fold and the live-vector predicate are written
+    once under ``operators/`` (in ``similarity``), and neither ``dedup``
+    nor ``similarity`` imports the other inside a function body."""
+    import ast
+    import pathlib
+    import re
+
+    ops = pathlib.Path(similarity.__file__).parent
+    src = {p.name: p.read_text() for p in ops.rglob("*.py")}
+    everywhere = "\n".join(src.values())
+    # the double dot / norm folds behind the cosine, and the cosine itself
+    assert len(re.findall(r"0D, \(acc, x\) -> acc \+ x\)", everywhere)) == 1
+    assert len(re.findall(r"0D, \(acc, x\) -> acc \+ x \* x\)", everywhere)) == 1
+    assert len(re.findall(r"F\.expr\(_dot\(", everywhere)) == 1
+    # FINITE_VEC conjoined with the norm test: the live predicate
+    assert len(re.findall(r"FINITE_VEC\.format\(v=\w+\)\)\s*&", everywhere)) == 0
+    assert len(re.findall(r"_finite\(\w+\) & \(F\.expr\(_norm\(", everywhere)) == 1
+    assert len(re.findall(r"^FINITE_VEC = ", everywhere, re.M)) == 1
+    for name, other in (("dedup.py", "similarity"), ("similarity.py", "dedup")):
+        for node in ast.walk(ast.parse(src[name])):
+            if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                for inner in ast.walk(node):
+                    if isinstance(inner, ast.ImportFrom):
+                        mods = [inner.module or ""] + [a.name for a in inner.names]
+                    elif isinstance(inner, ast.Import):
+                        mods = [a.name for a in inner.names]
+                    else:
+                        continue
+                    assert not any(m.split(".")[-1] == other for m in mods), (
+                        f"{name}:{inner.lineno} imports {other} in {node.name}"
+                    )
